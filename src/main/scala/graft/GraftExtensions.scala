@@ -16,6 +16,9 @@ import graft.functions.HistogramSketch
   *    histogram TypedImperativeAggregate behind the drift rules;
   *  - `graft_dot(a, b)` — the codegen'd array dot product behind the ANN
   *    similarity paths;
+  *  - `minhash_terms(terms, k, numHashes, family)` — the fused per-row
+  *    MinHash kernel (k-term shingle windows → per-seed minima, xxhash64 or
+  *    the portable md5 family) behind the near-dup signatures;
   *  - `topk_sketch(key, payload, k)` — the K-bounded deterministic
   *    top-K aggregate behind violation-sample caps;
   *  - `tdigest_sketch(col, compression)` / `tdigest_quantile(digest, q)`
@@ -48,5 +51,9 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
       FunctionIdentifier("graft_dot"),
       new ExpressionInfo(classOf[graft.functions.DotProduct].getName, "graft_dot"),
       (exprs: Seq[Expression]) => graft.functions.VectorOps.fromExpressions(exprs)))
+    ext.injectFunction((
+      FunctionIdentifier("minhash_terms"),
+      new ExpressionInfo(classOf[graft.functions.MinHashTerms].getName, "minhash_terms"),
+      (exprs: Seq[Expression]) => graft.functions.MinHashTerms.fromExpressions(exprs)))
   }
 }

@@ -52,7 +52,7 @@ object SparkEntry {
     * coalescing, so the width sticks. On a production many-file table the
     * scan already splits past the floor and this adds NO exchange — the
     * condition is derived from the file layout, not tuned to local mode. */
-  private def scanFloor(s: SparkSession, df: DataFrame, path: String): DataFrame = {
+  private[graft] def scanFloor(s: SparkSession, df: DataFrame, path: String): DataFrame = {
     if (!ScanFloorEnabled) return df
     val target = s.sparkContext.defaultParallelism
     // width the scan could reach at the most generous split size — pure
@@ -64,10 +64,16 @@ object SparkEntry {
         val p = new org.apache.hadoop.fs.Path(path)
         p.getFileSystem(s.sparkContext.hadoopConfiguration).getFileStatus(p).getLen
       } catch { case _: Exception => Long.MaxValue }
-    val maxSplit = s.sessionState.conf.filesMaxPartitionBytes
-    val reachableTasks = (bytes + maxSplit - 1) / maxSplit
-    if (reachableTasks < target) df.repartition(target) else df
+    if (reachableScanTasks(bytes, s.sessionState.conf.filesMaxPartitionBytes) < target)
+      df.repartition(target)
+    else df
   }
+
+  /** ⌈bytes / maxSplit⌉ without the overflow of `(bytes + maxSplit − 1) /
+    * maxSplit`: the metadata-failure sentinel `Long.MaxValue` must read as
+    * the widest possible scan (no floor), not wrap negative (floor). */
+  private[graft] def reachableScanTasks(bytes: Long, maxSplit: Long): Long =
+    if (bytes <= 0) 0L else 1L + (bytes - 1) / math.max(1L, maxSplit)
 
   /** A/B switch for [[scanFloor]] (`GRAFT_SCAN_FLOOR=0` disables) — used to
     * record the floor's effect in OPTIMIZATION_r06.md and as the opt-out

@@ -1,11 +1,12 @@
 package graft.pipeline
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Observation}
 import org.apache.spark.sql.functions._
 
 /** Deduplication operators for training-data pipelines, in increasing
   * fuzziness: exact (hash groupBy), n-gram Jaccard (inverted-index join),
-  * MinHash+LSH (shingle → signature → band buckets → candidate join),
+  * MinHash+LSH (fused per-row shingle-hash kernel → signature → band
+  * buckets → candidate join),
   * SimHash (bitwise fingerprint).
   *
   * Scale design:
@@ -217,42 +218,51 @@ object Dedup {
   case object Md5Portable extends HashFamily
   case object XxFast extends HashFamily
 
-  private def seededHash(s: Column, seed: Int, fam: HashFamily): Column = fam match {
-    // Md5Portable packs 4 seeds per md5 (hex windows) — see md5Hash32Window
-    case Md5Portable => md5Hash32Window(s, seed / 4, seed % 4)
-    case XxFast      => xxhash64(lit(seed), s)
+  /** 32-bit term hash of the legacy SimHash. */
+  private def seededHash(s: Column, fam: HashFamily): Column = fam match {
+    case Md5Portable => md5Hash32(s, 0)
+    case XxFast      => xxhash64(lit(0), s)
   }
 
   /** MinHash signatures `(id, sig_0 … sig_{k-1})`: min over the document's
     * distinct shingle set of k independent seeded hash functions.
     *
-    * Shape: explode shingles once, hash each (shingle, seed) pair exactly
-    * once, then ONE `groupBy(id)` with k `min` aggregates — Catalyst's
-    * partial aggregation reduces each partition to one k-vector per doc
-    * before the shuffle, so the shuffle carries |docs|·k longs regardless of
-    * document length. (A per-row higher-order-function version recomputes
-    * the shingle array per signature column after projection collapse —
-    * measured 4-16× slower.) */
+    * Shape: one fused native kernel per row
+    * ([[graft.functions.MinHashTerms]], `minhash_terms`) walks the term
+    * windows, writes each shingle's bytes into a reused buffer and keeps the
+    * per-seed minima — no shingle strings, no explode, no per-element
+    * lambdas. Then ONE `groupBy(id)` with k `min` aggregates (Catalyst's
+    * partial aggregation leaves one k-vector per doc per partition, so the
+    * shuffle carries |docs|·k longs regardless of document length) unions
+    * the shingle sets of rows sharing an id. The kernel's array is read k
+    * times but never inlined per slot: CollapseProject keeps a non-cheap
+    * producer referenced more than once in its own projection. Docs with no
+    * shingle are dropped AFTER the aggregate: a `where` over the kernel's
+    * alias would be pushed below the projection as a second kernel call. */
   def minhashSignatures(df: DataFrame, idCol: String, textCol: String,
       shingleK: Int, numHashes: Int, family: HashFamily = Md5Portable): DataFrame =
-    minhashFromShingles(shingles(df, idCol, textCol, shingleK), numHashes, family)
+    signaturesOf(df.select(col(idCol).as("id"), TextAnalysis.words(col(textCol)).as("terms")),
+      shingleK, numHashes, family)
 
   /** [[minhashSignatures]] over a pre-tokenized `array<int>` corpus —
     * identical signature math over token-id shingles. */
   def minhashSignaturesTokens(df: DataFrame, idCol: String, tokensCol: String,
       shingleK: Int, numHashes: Int, family: HashFamily = Md5Portable): DataFrame =
-    minhashFromShingles(tokenShingles(df, idCol, tokensCol, shingleK), numHashes, family)
+    signaturesOf(df.select(col(idCol).as("id"), col(tokensCol).as("terms")),
+      shingleK, numHashes, family)
 
-  /** Shared k-min signature aggregation over an exploded `(id, shingle)`
-    * frame: one hash per (doc, shingle, seed), k mins ride ONE partial
-    * aggregation. */
-  private def minhashFromShingles(sh: DataFrame, numHashes: Int,
+  private def signaturesOf(terms: DataFrame, shingleK: Int, numHashes: Int,
       family: HashFamily): DataFrame = {
-    val hashed = sh.select(col("id") +:
-      (0 until numHashes).map(j => seededHash(col("shingle"), j, family).as(s"h_$j")): _*)
-    hashed.groupBy("id")
-      .agg(min(col("h_0")).as("sig_0"),
-        (1 until numHashes).map(j => min(col(s"h_$j")).as(s"sig_$j")): _*)
+    val fam = family match {
+      case Md5Portable => "md5"
+      case XxFast      => "xxhash64"
+    }
+    terms.select(col("id"),
+        graft.functions.MinHashTerms.minhashTerms(col("terms"), shingleK, numHashes, fam).as("sig"))
+      .groupBy("id")
+      .agg(min(col("sig")(0)).as("sig_0"),
+        (1 until numHashes).map(j => min(col("sig")(j)).as(s"sig_$j")): _*)
+      .where(col("sig_0").isNotNull)
   }
 
   /** Back-compat wrapper joining signatures onto the source rows. */
@@ -403,24 +413,43 @@ object Dedup {
     val edges = pairs.select(col(idA).as("src"), col(idB).as("dst"))
       .unionByName(pairs.select(col(idB).as("src"), col(idA).as("dst")))
       .distinct().localCheckpoint()
-    var labels = edges.select(col("src").as("id")).distinct()
-      .withColumn("label", col("id")).localCheckpoint()
+    minLabelLoop(edges.select(col("src").as("id")).distinct(), maxIter, "connectedComponents") {
+      labels =>
+        edges.join(labels, edges("src") === labels("id"))
+          .groupBy(col("dst").as("id")).agg(min("label").as("nmin"))
+    }.withColumnRenamed("label", "component")
+  }
+
+  /** The min-label propagation loop shared by [[connectedComponents]] and
+    * [[minhashComponents]]: every node starts as its own label; each round
+    * takes `least(label, nmin)` with `neighborMin(labels)` giving
+    * `(id, nmin)`, until no label changes. Each round is ONE job: the
+    * changed-label count is observed on the round's `localCheckpoint`
+    * (`Dataset.observe`) instead of a separate `count()` pass over it.
+    * Returns `(id, label)`. */
+  private def minLabelLoop(nodes: DataFrame, maxIter: Int, op: String)(
+      neighborMin: DataFrame => DataFrame): DataFrame = {
+    var labels = nodes.withColumn("label", col("id")).localCheckpoint()
     var iter = 0
     var changed = 1L
     while (changed > 0 && iter < maxIter) {
-      val neighborMin = edges.join(labels, edges("src") === labels("id"))
-        .groupBy(col("dst")).agg(min("label").as("nmin"))
-      val updated = labels.join(neighborMin, labels("id") === neighborMin("dst"), "left")
+      val obs = Observation()
+      labels = labels.join(neighborMin(labels), Seq("id"), "left")
         .select(col("id"), col("label").as("old"),
           least(col("label"), coalesce(col("nmin"), col("label"))).as("label"))
+        .observe(obs, count_if(col("label") =!= col("old")).as("changed"))
         .localCheckpoint()
-      changed = updated.where(col("label") =!= col("old")).count()
-      labels = updated.select("id", "label")
+        .select("id", "label")
+      changed = observed(obs, "changed")
       iter += 1
     }
-    requireConverged(changed, iter, "connectedComponents")
-    labels.withColumnRenamed("label", "component")
+    requireConverged(changed, iter, op)
+    labels
   }
+
+  /** A long metric observed on a finished action. */
+  private def observed(obs: Observation, name: String): Long =
+    obs.get(name).asInstanceOf[Long]
 
   /** A propagation loop that exits on `maxIter` with updates still flowing
     * has NOT converged — the labels would silently split one duplicate
@@ -448,6 +477,8 @@ object Dedup {
     * component min); same output contract as [[connectedComponents]]. */
   def connectedComponentsStar(pairs: DataFrame, idA: String = "id_a",
       idB: String = "id_b", maxIter: Int = 30): DataFrame = {
+    // the one distinct per half-round: star outputs may repeat edges, sym
+    // dedups them together with their reversals
     def sym(e: DataFrame): DataFrame =
       e.unionByName(e.select(col("dst").as("src"), col("src").as("dst"))).distinct()
 
@@ -457,7 +488,6 @@ object Dedup {
         .join(m, "src")
         .select(col("dst").as("src"), col("m").as("dst"))
         .where(col("src") =!= col("dst"))
-        .distinct()
     }
 
     def smallStar(e: DataFrame): DataFrame = {
@@ -468,31 +498,35 @@ object Dedup {
         .select(col("dst").as("src"), col("m").as("dst"))
         .unionByName(m.select(col("src"), col("m").as("dst")))
         .where(col("src") =!= col("dst"))
-        .distinct()
     }
 
-    var edges = sym(pairs.select(col(idA).as("src"), col(idB).as("dst")))
-      .localCheckpoint()
-    // Order-independent set signature (count, XOR of per-edge hashes): a
-    // different signature PROVES the edge set changed, so the expensive
-    // exact symmetric difference runs only at the signature fixed point —
-    // once per run instead of twice per round (measured: ~2× on the
-    // CC-dominated queries). XOR never overflows (ANSI-safe) and a
-    // colliding signature merely falls through to the exact check.
-    def signature(e: DataFrame): (Long, Long) = {
-      val r = e.agg(count(lit(1)),
-        coalesce(bit_xor(xxhash64(col("src"), col("dst"))), lit(0L))).head()
-      (r.getLong(0), r.getLong(1))
+    // Order-independent set signature (count, XOR of per-edge hashes),
+    // observed on the round's own localCheckpoint — no separate job. A
+    // different signature PROVES the edge set changed, so the exact
+    // symmetric difference runs only at the signature fixed point, once per
+    // run. XOR never overflows (ANSI-safe) and a colliding signature merely
+    // falls through to the exact check.
+    def checkpointSigned(e: DataFrame): (DataFrame, (Long, Long)) = {
+      val obs = Observation()
+      val cp = e.observe(obs, count(lit(1)).as("n"),
+          coalesce(bit_xor(xxhash64(col("src"), col("dst"))), lit(0L)).as("x"))
+        .localCheckpoint()
+      (cp, (observed(obs, "n"), observed(obs, "x")))
     }
-    var sigNow = signature(edges)
+    // exact |next △ edges| in one job: tag each side, OR the tags per edge
+    // (both sides are distinct), count the edges not tagged by both
+    def symmetricDifference(a: DataFrame, b: DataFrame): Long =
+      a.withColumn("__t", lit(1)).unionByName(b.withColumn("__t", lit(2)))
+        .groupBy("src", "dst").agg(bit_or(col("__t")).as("__t"))
+        .where(col("__t") =!= 3).count()
+
+    var (edges, sigNow) =
+      checkpointSigned(sym(pairs.select(col(idA).as("src"), col(idB).as("dst"))))
     var iter = 0
     var changed = 1L
     while (changed > 0 && iter < maxIter) {
-      val next = sym(smallStar(sym(largeStar(edges)))).localCheckpoint()
-      val sigNext = signature(next)
-      changed =
-        if (sigNext == sigNow) next.except(edges).count() + edges.except(next).count()
-        else 1L
+      val (next, sigNext) = checkpointSigned(sym(smallStar(sym(largeStar(edges)))))
+      changed = if (sigNext == sigNow) symmetricDifference(edges, next) else 1L
       edges = next
       sigNow = sigNext
       iter += 1
@@ -528,24 +562,12 @@ object Dedup {
     val index = signed.select(col("id"),
         explode(array((0 until bands).map(b => col(s"band_$b")): _*)).as("bucket"))
       .localCheckpoint()
-    var labels = index.select("id").distinct()
-      .withColumn("label", col("id")).localCheckpoint()
-    var iter = 0
-    var changed = 1L
-    while (changed > 0 && iter < maxIter) {
-      val bucketMin = index.join(labels, "id")
-        .groupBy("bucket").agg(min("label").as("bmin"))
-      val docMin = index.join(bucketMin, "bucket")
-        .groupBy("id").agg(min("bmin").as("nmin"))
-      val updated = labels.join(docMin, Seq("id"))
-        .select(col("id"), col("label").as("old"),
-          least(col("label"), col("nmin")).as("label"))
-        .localCheckpoint()
-      changed = updated.where(col("label") =!= col("old")).count()
-      labels = updated.select("id", "label")
-      iter += 1
+    val labels = minLabelLoop(index.select("id").distinct(), maxIter, "minhashComponents") {
+      labels =>
+        val bucketMin = index.join(labels, "id")
+          .groupBy("bucket").agg(min("label").as("bmin"))
+        index.join(bucketMin, "bucket").groupBy("id").agg(min("bmin").as("nmin"))
     }
-    requireConverged(changed, iter, "minhashComponents")
     val sizes = labels.groupBy("label").agg(count(lit(1)).as("__n"))
     labels.join(sizes.where(col("__n") >= 2), Seq("label"))
       .select(col("id"), col("label").as("component"))
@@ -653,7 +675,7 @@ object Dedup {
       family: HashFamily = Md5Portable): DataFrame = {
     val h = df.select(col(idCol).as("id"),
         explode(TextAnalysis.words(col(textCol))).as("word"))
-      .select(col("id"), seededHash(col("word"), 0, family).as("hv"))
+      .select(col("id"), seededHash(col("word"), family).as("hv"))
     val votes = (0 until 32).map(b =>
       sum(when(shiftright(col("hv"), b).bitwiseAND(1) === 1, 1L).otherwise(-1L)).as(s"v_$b"))
     h.groupBy("id").agg(votes.head, votes.tail: _*)

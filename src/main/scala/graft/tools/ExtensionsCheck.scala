@@ -32,7 +32,12 @@ object ExtensionsCheck {
         "(SELECT tdigest_sketch(CAST(id AS DOUBLE), CAST(100 AS DOUBLE)) AS td FROM nums)")
       .head().toSeq.map(_.asInstanceOf[Double]).toArray
     require(math.abs(q - 49.5) < 2 && math.abs(c - 0.5) < 0.05, s"bad tdigest: q=$q c=$c")
-    println(s"EXTOK ${counts.mkString(",")} dot=$d tdigest_q50=$q tdigest_cdf50=$c")
+    // the fused MinHash kernel: one 3-shingle, seed 1 = xxhash64(1, '1 2 3')
+    val mh = spark.sql(
+      "SELECT minhash_terms(array(1, 2, 3), 3, 2, 'xxhash64')[1] = xxhash64(1, '1 2 3') AS ok")
+      .head().getBoolean(0)
+    require(mh, "bad minhash_terms")
+    println(s"EXTOK ${counts.mkString(",")} dot=$d tdigest_q50=$q tdigest_cdf50=$c minhash=$mh")
     spark.stop()
   }
 }

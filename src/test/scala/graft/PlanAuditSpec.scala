@@ -399,4 +399,35 @@ class PlanAuditSpec extends SparkSuite {
     assert(plan.contains("*("), "no whole-stage-codegen span in the validation plan")
     assert(!plan.contains("BatchEvalPython") && !plan.toLowerCase.contains("udf"))
   }
+
+  test("minhash signatures evaluate the fused kernel once per row, not once per sig_j") {
+    // the kernel's array feeds 16 min(sig[j]) slots: inlining the producer
+    // into each slot (CollapseProject) or re-evaluating it under a pushed
+    // filter would multiply the per-row hashing; and no shingle explode
+    import graft.functions.MinHashTerms
+    import graft.pipeline.Dedup
+    import org.apache.spark.sql.execution.SparkPlan
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+    import org.apache.spark.sql.functions.{col, length, split, transform}
+    def nodes(p: SparkPlan): Seq[SparkPlan] = p.collect { case n => n }.flatMap {
+      case a: AdaptiveSparkPlanExec => nodes(a.executedPlan)
+      case q: QueryStageExec => nodes(q.plan)
+      case n => Seq(n)
+    }
+    val docs = spark.read.parquet(s"$dir/documents.parquet")
+    for (sigs <- Seq(
+        Dedup.minhashSignatures(docs, "doc_id", "text", 3, 16, Dedup.Md5Portable),
+        Dedup.minhashSignaturesTokens(docs.select(col("doc_id"),
+          transform(split(col("text"), " "), w => length(w)).as("tokens")),
+          "doc_id", "tokens", 3, 16, Dedup.XxFast))) {
+      sigs.collect()
+      val kernels = sigs.queryExecution.optimizedPlan
+        .flatMap(_.expressions.flatMap(_.collect { case m: MinHashTerms => m }))
+      assert(kernels.size === 1, sigs.queryExecution.optimizedPlan)
+      val physical = nodes(sigs.queryExecution.executedPlan)
+      assert(physical.flatMap(_.expressions.flatMap(_.collect { case m: MinHashTerms => m }))
+        .size === 1, sigs.queryExecution.executedPlan)
+      assert(!physical.exists(_.nodeName == "Generate"), "signatures explode shingles again")
+    }
+  }
 }
