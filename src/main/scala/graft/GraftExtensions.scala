@@ -19,6 +19,8 @@ import graft.functions.HistogramSketch
   *  - `minhash_terms(terms, k, numHashes, family)` — the fused per-row
   *    MinHash kernel (k-term shingle windows → per-seed minima, xxhash64 or
   *    the portable md5 family) behind the near-dup signatures;
+  *  - `rfc3339_check(s, kind)` — the single-pass byte kernel behind the
+  *    `date`, `time` and `date-time` formats;
   *  - `topk_sketch(key, payload, k)` — the K-bounded deterministic
   *    top-K aggregate behind violation-sample caps;
   *  - `tdigest_sketch(col, compression)` / `tdigest_quantile(digest, q)`
@@ -55,5 +57,9 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
       FunctionIdentifier("minhash_terms"),
       new ExpressionInfo(classOf[graft.functions.MinHashTerms].getName, "minhash_terms"),
       (exprs: Seq[Expression]) => graft.functions.MinHashTerms.fromExpressions(exprs)))
+    ext.injectFunction((
+      FunctionIdentifier("rfc3339_check"),
+      new ExpressionInfo(classOf[graft.functions.Rfc3339Check].getName, "rfc3339_check"),
+      (exprs: Seq[Expression]) => graft.functions.Rfc3339Check.fromExpressions(exprs)))
   }
 }

@@ -5,8 +5,26 @@ import org.apache.spark.sql.functions._
 
 /** Format validators — behavioral port of the reference's 24 named formats
   * (reference lib/JSON/Validator/Formats.pm), each as a pure Catalyst
-  * `Column => Column` boolean predicate (true = valid). No UDFs: everything
-  * stays inside whole-stage codegen.
+  * `Column => Column` boolean predicate (true = valid), NULL on NULL.
+  *
+  * `date`, `time` and `date-time` are one native expression,
+  * [[Rfc3339Check]]: a single pass over the UTF-8 bytes with generated code
+  * (no regex, no `toString`, no timestamp parser), so the per-row cost of
+  * these checks is a few byte compares. They accept, quirks included:
+  *  - `date-time`: `^\d{4}-\d\d-\d\d[Tt ]\d\d:\d\d:\d\d(\.\d+)?([Zz]|[+-]\d\d:\d\d)?$`;
+  *    a real proleptic-Gregorian date (year 0000 is valid), hh ≤ 23,
+  *    mm ≤ 59, ss ≤ 60 (leap second, like the reference's timegm) and
+  *    offset hours ≤ 23, minutes ≤ 59;
+  *  - `date`: `^\d{4}-\d\d-\d\d$` plus the same calendar check;
+  *  - `time`: `^\d\d:\d\d:\d\d(\.\d+)?([Zz]|[+-]\d+:\d+)?$` with the same
+  *    hh/mm/ss bounds; the offset is any digits and is not range-checked;
+  *  - `\d` is ASCII 0-9 only, and `$` is java.util.regex's: it also
+  *    matches before ONE final line terminator (`\n`, `\r\n`, `\r`,
+  *    U+0085, U+2028, U+2029). `date-time` and `time` accept it; `date`
+  *    rejects it.
+  *
+  * The other formats stay Catalyst regex/compare composites, inside
+  * whole-stage codegen.
   *
   * The registry is user-extensible like the reference's `formats` hash
   * (reference Schema.pm:164-192): pass extra entries to [[Registry]].
@@ -25,29 +43,11 @@ object Formats {
   def byte(c: Column): Column = re(c, "^[A-Za-z0-9+/=]+$")
 
   /** RFC3339 full-date with real calendar validity (reference
-    * Formats.pm:20-31 uses timegm; Spark's strict CORRECTED parser rejects
-    * impossible dates like 2023-02-30). */
-  def date(c: Column): Column =
-    re(c, "^\\d{4}-\\d\\d-\\d\\d$") && try_to_timestamp(c, lit("yyyy-MM-dd")).isNotNull
+    * Formats.pm:20-31 uses timegm). */
+  def date(c: Column): Column = Rfc3339Check.rfc3339Check(c, "date")
 
   /** RFC3339 date-time incl. offset-bound checks (reference Formats.pm:33-46). */
-  def dateTime(c: Column): Column = {
-    val p = "^(\\d{4})-(\\d\\d)-(\\d\\d)[Tt ](\\d\\d):(\\d\\d):(\\d\\d)(\\.\\d+)?([Zz]|[+-]\\d\\d:\\d\\d)?$"
-    val shape = re(c, p)
-    val datePart  = regexp_extract(c, p, 1) |+| "-" |+| regexp_extract(c, p, 2) |+| "-" |+| regexp_extract(c, p, 3)
-    val hh        = regexp_extract(c, p, 4)
-    val mm        = regexp_extract(c, p, 5)
-    val ss        = regexp_extract(c, p, 6)
-    val offOk     = !re(c, "[+-](2[4-9]|[3-9]\\d):\\d\\d$") && !re(c, "[+-]\\d\\d:(6\\d|[7-9]\\d)$")
-    shape && offOk &&
-      try_to_timestamp(datePart, lit("yyyy-MM-dd")).isNotNull &&
-      (hh < lit("24")) && (mm < lit("60")) && (ss <= lit("60")) // leap second allowed like timegm
-  }
-
-  private implicit class ConcatOps(val c: Column) extends AnyVal {
-    def |+|(other: Column): Column = concat(c, other)
-    def |+|(s: String): Column = concat(c, lit(s))
-  }
+  def dateTime(c: Column): Column = Rfc3339Check.rfc3339Check(c, "date-time")
 
   /** ISO8601 duration regex (reference Formats.pm:50-66, ported
     * structurally) — RE2-safe, shared with the SQL oracle. */
@@ -146,11 +146,7 @@ object Formats {
     re(c, "^[0-9A-Fa-f]{8}-[0-9A-Fa-f]{4}-[0-9][0-9A-Fa-f]{3}-[0-9A-Fa-f]{4}-[0-9A-Fa-f]{12}$")
 
   /** RFC3339 time (reference Formats.pm:175-185). */
-  def time(c: Column): Column = {
-    val p = "^(\\d\\d):(\\d\\d):(\\d\\d)(\\.\\d+)?([Zz]|[+-]\\d+:\\d+)?$"
-    re(c, p) && regexp_extract(c, p, 1) < lit("24") &&
-      regexp_extract(c, p, 2) < lit("60") && regexp_extract(c, p, 3) <= lit("60")
-  }
+  def time(c: Column): Column = Rfc3339Check.rfc3339Check(c, "time")
 
   /** `regex` format: compilability is checked on the driver at rule-compile
     * time (reference Formats.pm:171-173) — per-row it is a constant. */

@@ -34,7 +34,12 @@ import scala.collection.mutable
   *
   * Output: `array<struct<score double, id long>>` in rank order (element
   * i = rank i+1) — `posexplode` reconstructs the window's rank column.
-  * NULL ids are skipped (ids are never null in the ANN tables). */
+  *
+  * NULL ids: a row with a NULL id is dropped before ranking, so it never
+  * takes a rank. This is where the aggregate differs from the
+  * `row_number` window it replaces, which ranks NULL-id rows like any
+  * other. The ANN tables it serves never carry NULL ids; a caller whose
+  * ids can be NULL must filter or key them first. */
 case class TopKByScore(
     left: Expression,   // score (DOUBLE, nullable)
     right: Expression,  // id (LONG)

@@ -37,7 +37,13 @@ object ExtensionsCheck {
       "SELECT minhash_terms(array(1, 2, 3), 3, 2, 'xxhash64')[1] = xxhash64(1, '1 2 3') AS ok")
       .head().getBoolean(0)
     require(mh, "bad minhash_terms")
-    println(s"EXTOK ${counts.mkString(",")} dot=$d tdigest_q50=$q tdigest_cdf50=$c minhash=$mh")
+    // the RFC3339 format kernel: 2024-02-29 is a date, 2023-02-29 is not
+    val rfc = spark.sql(
+      "SELECT rfc3339_check('2024-02-29T23:59:60+05:30', 'date-time') AND " +
+        "NOT rfc3339_check('2023-02-29', 'date') AND rfc3339_check('10:00:00Z', 'time') AS ok")
+      .head().getBoolean(0)
+    require(rfc, "bad rfc3339_check")
+    println(s"EXTOK ${counts.mkString(",")} dot=$d tdigest_q50=$q tdigest_cdf50=$c minhash=$mh rfc3339=$rfc")
     spark.stop()
   }
 }

@@ -430,4 +430,31 @@ class PlanAuditSpec extends SparkSuite {
       assert(!physical.exists(_.nodeName == "Generate"), "signatures explode shingles again")
     }
   }
+
+  test("date, time and date-time formats run one rfc3339_check per row each, no regex or timestamp parse") {
+    import graft.core.{JValue, Violations}
+    import graft.functions.Rfc3339Check
+    import graft.rulepack.RulePack
+    import org.apache.spark.sql.catalyst.expressions.{ParseToTimestamp, RLike, RegExpExtract, ToTimestamp}
+    import org.apache.spark.sql.functions.{col, concat, format_string, lit}
+    val pack = RulePack.fromJson(JValue.parseAny(
+      """{"type": "object", "properties": {"d": {"format": "date"}, "t": {"format": "time"},
+        |"dt": {"format": "date-time"}}}""".stripMargin))
+    // a range, not local rows: the optimizer folds projections over those
+    val rows = spark.range(100).select(col("id"),
+      format_string("2024-02-%02d", col("id") % 31).as("d"),
+      format_string("%02d:00:00Z", col("id") % 25).as("t"),
+      concat(format_string("2024-02-%02d", col("id") % 31), lit("T10:00:00+05:30")).as("dt"))
+    for (df <- Seq(Violations.validate(rows, pack, Seq("id")),
+        Violations.verdictByPartition(rows, pack, None))) {
+      val plan = df.queryExecution.optimizedPlan
+      val exprs = plan.flatMap(_.expressions.flatMap(_.collect { case e => e }))
+      assert(exprs.collect { case r: Rfc3339Check => r.kind }.sorted === Seq("date", "date-time", "time"),
+        plan)
+      assert(!exprs.exists {
+        case _: RLike | _: RegExpExtract | _: ToTimestamp | _: ParseToTimestamp => true
+        case _ => false
+      }, plan)
+    }
+  }
 }

@@ -77,4 +77,15 @@ class TopKByScoreSpec extends SparkSuite {
       assert(canon(aggTopK(df, 5, asc)) === canon(windowTopK(df, 5, asc)),
         s"asc=$asc")
   }
+
+  test("NULL ids are dropped, where the window would rank them") {
+    import spark.implicits._
+    val df = Seq[(Long, java.lang.Long, java.lang.Double)](
+      (1L, 10L, 0.5), (1L, null, 0.9), (1L, 11L, 0.1), (1L, 12L, 0.7)
+    ).toDF("q", "id", "score")
+    assert(canon(aggTopK(df, 3, asc = false)) ===
+      canon(windowTopK(df.where(col("id").isNotNull), 3, asc = false)))
+    // the window it replaced ranks the NULL id first (best score)
+    assert(windowTopK(df, 3, asc = false).orderBy("rank").head().isNullAt(1))
+  }
 }
