@@ -22,10 +22,10 @@ import graft.functions.HistogramSketch
   *  - `rfc3339_check(s, kind)` — the single-pass byte kernel behind the
   *    `date`, `time` and `date-time` formats;
   *  - `topk_sketch(key, payload, k)` — the K-bounded deterministic
-  *    top-K aggregate behind violation-sample caps;
-  *  - `tdigest_sketch(col, compression)` / `tdigest_quantile(digest, q)`
-  *    — the mergeable t-digest quantile sketch (north_star's named
-  *    at-scale quantile path).
+  *    top-K aggregate behind violation-sample caps.
+  *
+  * Quantile sketches need no injection: they are Spark's built-in
+  * `kll_sketch_*` functions ([[graft.stats.QuantileSketch]]).
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
@@ -37,18 +37,6 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
       FunctionIdentifier("topk_sketch"),
       new ExpressionInfo(classOf[graft.functions.TopKSketch].getName, "topk_sketch"),
       (exprs: Seq[Expression]) => graft.functions.TopKSketch.fromExpressions(exprs)))
-    ext.injectFunction((
-      FunctionIdentifier("tdigest_sketch"),
-      new ExpressionInfo(classOf[graft.functions.TDigestSketch].getName, "tdigest_sketch"),
-      (exprs: Seq[Expression]) => graft.functions.TDigestSketch.fromExpressions(exprs)))
-    ext.injectFunction((
-      FunctionIdentifier("tdigest_quantile"),
-      new ExpressionInfo(classOf[graft.functions.TDigestQuantile].getName, "tdigest_quantile"),
-      (exprs: Seq[Expression]) => graft.functions.TDigestSketch.quantileFromExpressions(exprs)))
-    ext.injectFunction((
-      FunctionIdentifier("tdigest_cdf"),
-      new ExpressionInfo(classOf[graft.functions.TDigestCdf].getName, "tdigest_cdf"),
-      (exprs: Seq[Expression]) => graft.functions.TDigestSketch.cdfFromExpressions(exprs)))
     ext.injectFunction((
       FunctionIdentifier("graft_dot"),
       new ExpressionInfo(classOf[graft.functions.DotProduct].getName, "graft_dot"),

@@ -15,6 +15,9 @@ import org.apache.spark.sql.SparkSession
   *    twice per row — `explode` already skips empty arrays, and the rule
   *    costs a measured 2× on validation queries. (Same motivation as the
   *    upstream default exclusion of this rule for expensive generators.)
+  *  - codegen cache of 1000 classes: Spark's default 100 is split over
+  *    four hash-picked segments, so one validation pass's generated
+  *    classes evict each other and a repeat pass compiles them again.
   */
 object GraftSession {
 
@@ -38,6 +41,7 @@ object GraftSession {
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
       .config("spark.sql.optimizer.excludedRules", ExcludedRules)
+      .config("spark.sql.codegen.cache.maxEntries", "1000")
       .config("spark.ui.enabled", "false")
 
   def get(cores: String, appName: String = "graft"): SparkSession = {

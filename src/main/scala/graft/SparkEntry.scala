@@ -4,7 +4,7 @@ import graft.core.{Rule, Violations}
 import graft.core.Rule._
 import graft.global.{Referential, Uniqueness}
 import graft.pipeline.{Classifier, Dedup, Multimodal, Packing, RangeJoin, Sampling, Similarity, TextAnalysis, Vocab}
-import graft.stats.{ColumnStats, Drift, PackInference}
+import graft.stats.{ColumnStats, Drift, PackInference, QuantileSketch}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -617,15 +617,15 @@ object SparkEntry {
     }),
 
     "v47_drift_sketched" -> ((s, dir) => {
-      // north_star composed end to end: the t-digest as the STORED
-      // snapshot artifact for distribution-drift checks — PSI/KL computed
-      // from two digests via tdigest_cdf (Drift.psiSketched/klSketched;
-      // neither snapshot is rescanned once its digest exists) and judged
-      // against the exact histogram PSI/KL over the same binning. The
-      // sketch value is merge-order-dependent, so the oracle pins the
-      // portable pair: the EXACT distances plus the claim that the
-      // sketched ones landed within 0.01 absolute (measured gap at sf0.01
-      // is ~2.5e-4 — 40× headroom; TDigestSpec pins the tracking law on a
+      // north_star composed end to end: the KLL sketch as the STORED
+      // snapshot artifact for distribution-drift checks — PSI/KL/JS
+      // computed from two sketches via their exclusive ranks at the bin
+      // edges (Drift.psiSketched/klSketched/jsSketched) and judged against
+      // the exact histogram distances over the same binning. The sketch is
+      // randomized, so the oracle pins the portable pair: the EXACT
+      // distances plus the claim that the sketched ones landed within 0.01
+      // absolute (QuantileSketch.K is sized so the 20-run worst gap stays
+      // at most half of that; TDigestSpec pins the tracking law on a
       // strongly-drifted fixture where PSI > 0.2)
       val li = tNoFloor(s, dir, "lineitem")
       val ref = li.where(col("l_shipdate") < lit("1998-01-01").cast("timestamp"))
@@ -646,24 +646,22 @@ object SparkEntry {
     }),
 
     "v45_tdigest_quantiles" -> ((s, dir) => {
-      // t-digest quantile sketch (the north-star's NAMED at-scale quantile
-      // path; public algorithm: Dunning & Ertl's merging digest). Centroid
-      // layout is merge-order-dependent, so the oracle pins what is
-      // portable: the EXACT R-7 quantile (v24 parity) plus the claim that
-      // the sketch landed within 0.02 RANK error. The rank check is
+      // KLL quantile sketch (the engine's at-scale quantile path,
+      // QuantileSketch). The sketch is randomized, so the oracle pins what
+      // is portable: the EXACT R-7 quantile (v24 parity) plus the claim
+      // that the sketch landed within 0.02 RANK error. The rank check is
       // interval-form — P(X < est) − eps ≤ q ≤ P(X ≤ est) + eps — so a
       // discrete column whose atoms carry 9% mass each (l_discount) is
       // judged fairly: an atom contributes its whole mass to the pass
-      // interval. Spec'd bound at compression 300 is <0.01 (TDigestSpec),
-      // giving the gate 2× headroom.
-      graft.functions.TDigestSketch.register(s)
+      // interval. QuantileSketch.K keeps the 20-run worst case at most
+      // half of the gate.
       val cols = Seq("l_quantity", "l_extendedprice", "l_discount")
       val qs = Seq(0.01, 0.1, 0.25, 0.5, 0.75, 0.9, 0.99)
       val li = t(s, dir, "lineitem")
-      // pass 1: ONE digest aggregation; the collect touches |cols|×|qs|
+      // pass 1: ONE sketch aggregation; the collect touches |cols|×|qs|
       // scalar estimates (tiny), mirroring the PackInference pattern
       val ests: Map[(String, Double), Double] =
-        ColumnStats.quantileDigest(li, cols, qs, compression = 300)
+        ColumnStats.quantileDigest(li, cols, qs)
           .collect().map(r => (r.getString(0), r.getDouble(1)) -> r.getDouble(2)).toMap
       // pass 2: ONE exact aggregation — R-7 quantiles + the rank interval
       // of each estimate via counter sums against literal estimates
@@ -1310,27 +1308,22 @@ object SparkEntry {
     }),
 
     "st06_stream_quantile_digest" -> ((s, dir) => {
-      // the t-digest as a STREAMING sketch (same replay harness as
-      // st03-st05): one digest row per closed 4-hour window. The digest
-      // bytes are merge-order-dependent, so the oracle pins the portable
-      // pair — the EXACT non-null row count per window (the digest's
-      // conserved weight) and the claim that the windowed median estimate
-      // landed within rank tolerance of the window's own distribution
-      // (v45's interval form: lt/n − tol ≤ 0.5 ≤ le/n + tol, so discrete
-      // atoms are judged fairly). tol = max(0.02, 2/n): quantile()
-      // interpolates BETWEEN points, so a tiny window's estimate can
-      // legitimately sit up to ~1/(2n) past the midpoint rank (twice that
-      // when equal values merged into one centroid) — without the n-term
-      // a marginal small window could flip on merge order and flake the
-      // gate. The rank counters come from a batch pass over the same
-      // events joined to the BROADCAST window table.
-      graft.functions.TDigestSketch.register(s)
+      // the KLL sketch as a STREAMING sketch (same replay harness as
+      // st03-st05): one sketch row per closed 4-hour window. The sketch is
+      // randomized, so the oracle pins the portable pair — the EXACT
+      // non-null row count per window and the claim that the windowed
+      // median estimate landed within rank tolerance of the window's own
+      // distribution (v45's interval form: lt/n − tol ≤ 0.5 ≤ le/n + tol,
+      // so discrete atoms are judged fairly). tol = max(0.02, 2/n): the
+      // n-term keeps a tiny window's one-sample rank step from deciding
+      // the verdict. The rank counters come from a batch pass over the
+      // same events joined to the BROADCAST window table.
       val stream = stagedEventStream(s, dir, "st06_events")
       val digests = runToMemorySink(s, graft.streaming.StreamingValidate
           .windowedQuantileDigest(stream, "ts", "value", "4 hours", "30 minutes"),
           "st06_sink")
         .select(col("window_start").cast("long").as("window_start"),
-          graft.functions.TDigestSketch.tdigestQuantile(col("digest"), 0.5).as("med"))
+          QuantileSketch.quantile(col("digest"), 0.5).as("med"))
       val ev = t(s, dir, "events").where(col("value").isNotNull)
         .select((floor(unix_timestamp(col("ts")) / 14400) * 14400).cast("long")
           .as("window_start"), col("value"))

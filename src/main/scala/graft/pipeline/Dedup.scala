@@ -265,13 +265,6 @@ object Dedup {
       .where(col("sig_0").isNotNull)
   }
 
-  /** Back-compat wrapper joining signatures onto the source rows. */
-  def withMinhashSignature(df: DataFrame, textCol: String, shingleK: Int, numHashes: Int): DataFrame = {
-    val idCol = df.columns.head
-    df.join(minhashSignatures(df, idCol, textCol, shingleK, numHashes)
-      .withColumnRenamed("id", idCol), idCol)
-  }
-
   /** LSH band keys from a signature: `bands` bands of `rowsPerBand` hashes,
     * each band hashed to one bucket string. */
   def bandKeys(numHashes: Int, bands: Int): Seq[Column] = {

@@ -13,8 +13,10 @@ import org.apache.spark.sql.types._
   * only the tiny state, so the cost at 100 TB is one scan + a constant-size
   * shuffle. Approx-distinct uses the built-in HyperLogLog++
   * (`approx_count_distinct`); quantiles the built-in `percentile_approx`
-  * sketch. The long-format output (one row per column) is stable for tests
-  * and SQL-expressible for the DuckDB oracle (exact stats only).
+  * (Greenwald–Khanna `QuantileSummaries`), or KLL sketches through
+  * [[quantileDigest]] where the sketch itself must be kept. The
+  * long-format output (one row per column) is stable for tests and
+  * SQL-expressible for the DuckDB oracle (exact stats only).
   */
 object ColumnStats {
 
@@ -75,22 +77,19 @@ object ColumnStats {
       .select("s.*")
   }
 
-  /** t-digest quantile estimates for numeric columns in ONE aggregation —
-    * the at-scale quantile path `BASELINE.json`'s north_star names
-    * ("t-digest quantile sketches"). Unlike `percentile_approx`, the
-    * digest itself is an engine-owned mergeable artifact
-    * ([[graft.functions.TDigestSketch]]): it can be stored per
-    * partition/snapshot in the metrics table and re-merged across runs.
-    * Long output: one row per (column, q) with the estimate. */
-  def quantileDigest(df: DataFrame, columns: Seq[String], qs: Seq[Double],
-      compression: Double = 300): DataFrame = {
-    import graft.functions.TDigestSketch.{tdigestSketch, tdigestQuantile}
-    graft.functions.TDigestSketch.register(df.sparkSession)
-    val aggs = columns.map(c => tdigestSketch(col(c), compression).as(s"${c}__td"))
+  /** KLL quantile estimates for numeric columns in ONE aggregation, the
+    * at-scale quantile path. Unlike `percentile_approx`, whose
+    * Greenwald–Khanna buffer never leaves the aggregate, each column's
+    * sketch ([[QuantileSketch]]) is a mergeable artifact that can be stored
+    * per partition or snapshot and merged again across runs.
+    * Long output: one row per (column, q) with the estimate; an all-null
+    * column gives a NULL estimate. */
+  def quantileDigest(df: DataFrame, columns: Seq[String], qs: Seq[Double]): DataFrame = {
+    val aggs = columns.map(c => QuantileSketch.sketch(col(c)).as(s"${c}__kll"))
     val row = df.agg(aggs.head, aggs.tail: _*)
     val perCol = columns.map { c =>
       struct(lit(c).as("column"), array(qs.map { q =>
-        struct(lit(q).as("q"), tdigestQuantile(col(s"${c}__td"), q).as("est"))
+        struct(lit(q).as("q"), QuantileSketch.quantile(col(s"${c}__kll"), q).as("est"))
       }: _*).as("ests"))
     }
     row.select(explode(array(perCol: _*)).as("s"))

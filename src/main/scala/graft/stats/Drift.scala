@@ -12,12 +12,13 @@ import org.apache.spark.sql.functions._
   * counts are exact integers (deterministic across partitionings and
   * engines); only the final PSI/KL arithmetic is floating point.
   *
-  * For quantile-based drift the stored reference sketch is the engine's
-  * own t-digest ([[graft.functions.TDigestSketch]], the north_star's named
-  * sketch): [[psiSketched]]/[[klSketched]] compute the drift distance from
-  * two digests via `tdigest_cdf` without rescanning either snapshot; the
-  * built-in `percentile_approx` (KLL-style; PAPERS.md quantile-sketch
-  * survey) remains available where only point quantiles are needed.
+  * For quantile-based drift the stored snapshot artifact is a KLL sketch
+  * ([[QuantileSketch]], Spark's built-in `kll_sketch_*`):
+  * [[psiSketched]]/[[klSketched]]/[[jsSketched]] compute the drift
+  * distance from two sketches via their ranks at the bin edges, without
+  * rescanning either snapshot. The built-in `percentile_approx`
+  * (Greenwald–Khanna `QuantileSummaries`) remains available where only
+  * point quantiles are needed.
   */
 object Drift {
 
@@ -123,27 +124,24 @@ object Drift {
       .agg(sum((col("p") - col("q")) * log(col("p") / col("q"))).as("psi"))
   }
 
-  /** Per-bin (p, q) proportions derived from two t-digest SKETCHES instead
-    * of exact histograms: bin mass = `cdf(hi) − cdf(lo)` on each digest,
-    * edge bins absorb the tails (cdf is monotone, so masses are
-    * non-negative and sum to 1 — the same clamp contract as
-    * [[histogram]]). This is the north_star's "t-digest quantile sketches
-    * for distribution-drift checks" composed end to end: each snapshot is
-    * ONE digest aggregation (O(compression) state), and the drift
-    * arithmetic runs on the two stored artifacts — re-checking against a
-    * month of snapshots rescans nothing. */
+  /** Per-bin (p, q) proportions derived from two KLL SKETCHES instead of
+    * exact histograms: bin mass = `rank(hi) − rank(lo)` on each sketch,
+    * with the exclusive rank P(X < edge) of [[QuantileSketch.rankBelow]] so
+    * the bins are `[lo, hi)` like [[histogram]]'s; edge bins absorb the
+    * tails (rank is monotone, so masses are non-negative and sum to 1 — the
+    * same clamp contract as [[histogram]]). Each snapshot is ONE sketch
+    * aggregation (O(K log(n/K)) state), and the drift arithmetic runs on
+    * the two stored artifacts — re-checking against a month of snapshots
+    * rescans nothing. */
   private def digestProportions(reference: DataFrame, current: DataFrame,
-      valueCol: String, lo: Double, hi: Double, bins: Int,
-      compression: Double, eps: Double): DataFrame = {
-    import graft.functions.TDigestSketch.{tdigestSketch, tdigestCdf}
-    graft.functions.TDigestSketch.register(reference.sparkSession)
-    val rd = reference.agg(tdigestSketch(col(valueCol), compression).as("dref"))
-    val cd = current.agg(tdigestSketch(col(valueCol), compression).as("dcur"))
+      valueCol: String, lo: Double, hi: Double, bins: Int, eps: Double): DataFrame = {
+    val rd = reference.agg(QuantileSketch.sketch(col(valueCol)).as("dref"))
+    val cd = current.agg(QuantileSketch.sketch(col(valueCol)).as("dcur"))
     val width = (hi - lo) / bins
     val rows = (0 until bins).map { i =>
       def mass(d: String): Column = {
-        val pl = if (i == 0) lit(0.0) else tdigestCdf(col(d), lo + i * width)
-        val ph = if (i == bins - 1) lit(1.0) else tdigestCdf(col(d), lo + (i + 1) * width)
+        val pl = if (i == 0) lit(0.0) else QuantileSketch.rankBelow(col(d), lo + i * width)
+        val ph = if (i == bins - 1) lit(1.0) else QuantileSketch.rankBelow(col(d), lo + (i + 1) * width)
         ph - pl
       }
       struct(lit(i).as("bin"), mass("dref").as("p"), mass("dcur").as("q"))
@@ -155,28 +153,25 @@ object Drift {
         greatest(col("s.q"), lit(eps)).as("q"))
   }
 
-  /** PSI computed from two t-digest sketches (see [[digestProportions]]);
-    * agrees with the exact [[psi]] to within the digest's rank error —
+  /** PSI computed from two KLL sketches (see [[digestProportions]]);
+    * agrees with the exact [[psi]] to within the sketch's rank error —
     * pinned by spec and by the v47 oracle's tolerance verdict. */
   def psiSketched(reference: DataFrame, current: DataFrame, valueCol: String,
-      lo: Double, hi: Double, bins: Int,
-      compression: Double = 300, eps: Double = 1e-6): DataFrame =
-    digestProportions(reference, current, valueCol, lo, hi, bins, compression, eps)
+      lo: Double, hi: Double, bins: Int, eps: Double = 1e-6): DataFrame =
+    digestProportions(reference, current, valueCol, lo, hi, bins, eps)
       .agg(sum((col("p") - col("q")) * log(col("p") / col("q"))).as("psi"))
 
-  /** KL(P || Q) from two t-digest sketches. */
+  /** KL(P || Q) from two KLL sketches. */
   def klSketched(reference: DataFrame, current: DataFrame, valueCol: String,
-      lo: Double, hi: Double, bins: Int,
-      compression: Double = 300, eps: Double = 1e-6): DataFrame =
-    digestProportions(reference, current, valueCol, lo, hi, bins, compression, eps)
+      lo: Double, hi: Double, bins: Int, eps: Double = 1e-6): DataFrame =
+    digestProportions(reference, current, valueCol, lo, hi, bins, eps)
       .agg(sum(col("p") * log(col("p") / col("q"))).as("kl"))
 
-  /** Jensen–Shannon divergence from two t-digest sketches — the bounded
+  /** Jensen–Shannon divergence from two KLL sketches — the bounded
     * symmetric member, same shape as [[js]]. */
   def jsSketched(reference: DataFrame, current: DataFrame, valueCol: String,
-      lo: Double, hi: Double, bins: Int,
-      compression: Double = 300, eps: Double = 1e-6): DataFrame =
-    digestProportions(reference, current, valueCol, lo, hi, bins, compression, eps)
+      lo: Double, hi: Double, bins: Int, eps: Double = 1e-6): DataFrame =
+    digestProportions(reference, current, valueCol, lo, hi, bins, eps)
       .select(col("p"), col("q"), ((col("p") + col("q")) / 2).as("m"))
       .agg(sum(col("p") * log(col("p") / col("m")) * 0.5
         + col("q") * log(col("q") / col("m")) * 0.5).as("js"))

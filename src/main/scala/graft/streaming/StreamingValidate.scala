@@ -244,25 +244,21 @@ object StreamingValidate {
         col("n_violations"), col("sample_ids"))
   }
 
-  /** Tumbling-window t-digest — the streaming QUANTILE monitor: each closed
-    * window yields `(window_start, digest)`, one O(compression) sketch row
-    * per window (bounded state, same contract as [[windowedHistogram]]'s
-    * counters). Downstream, `tdigest_quantile`/`tdigest_cdf` read medians
-    * and tail ranks off the stored rows, and [[graft.stats.Drift.psiSketched]]'s
+  /** Tumbling-window KLL sketch — the streaming QUANTILE monitor: each
+    * closed window yields `(window_start, digest)`, one bounded binary
+    * sketch row per window (same contract as [[windowedHistogram]]'s
+    * counters). Downstream, [[graft.stats.QuantileSketch]] reads medians and
+    * tail ranks off the stored rows, and [[graft.stats.Drift.psiSketched]]'s
     * arithmetic turns any two of them into a drift distance — nothing
     * rescans the stream. Null values are skipped (an all-null window emits
     * no row, matching the batch profile's treatment). */
   def windowedQuantileDigest(stream: DataFrame, tsCol: String, valueCol: String,
-      windowDuration: String, watermark: String,
-      compression: Double = 300): DataFrame = {
-    graft.functions.TDigestSketch.register(stream.sparkSession)
+      windowDuration: String, watermark: String): DataFrame =
     stream.where(col(valueCol).isNotNull)
       .withWatermark(tsCol, watermark)
       .groupBy(window(col(tsCol), windowDuration))
-      .agg(graft.functions.TDigestSketch
-        .tdigestSketch(col(valueCol), compression).as("digest"))
+      .agg(graft.stats.QuantileSketch.sketch(col(valueCol)).as("digest"))
       .select(col("window.start").as("window_start"), col("digest"))
-  }
 
   /** Tumbling-window fixed-bin histogram — the streaming drift monitor's
     * sketch emitter. Each closed window yields its `(window_start, bin, n)`

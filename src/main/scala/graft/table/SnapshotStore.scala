@@ -18,6 +18,7 @@ import java.nio.charset.StandardCharsets
   * {{{
   *   <root>/data/<partCol>=<value>/…parquet     (dynamic partition overwrite)
   *   <root>/_snapshots/<snapshotId>.json        (manifest, atomic rename)
+  *   <root>/bucketed/<table>/…parquet           (writeBucketed catalog table)
   * }}}
   *
   * Resume contract: a run writes partition-by-partition-group via dynamic
@@ -179,8 +180,10 @@ class SnapshotStore(root: String, spark: SparkSession) {
     * amortized over every rerun. `sortBy` additionally orders each bucket
     * file so min/max row-group stats stay selective on the key.
     *
-    * Caveats: bucketed writes require a catalog table (`saveAsTable`),
-    * and the no-shuffle read needs the reader's
+    * Caveats: bucketed writes require a catalog table (`saveAsTable`);
+    * its files are anchored at `<root>/bucketed/<table>` so the snapshot
+    * lives in the store's layout, not the session warehouse. The
+    * no-shuffle read needs the reader's
     * `spark.sql.sources.bucketing.enabled` (default true). Pick
     * `numBuckets` so each bucket lands near the 128 MB-1 GB file band at
     * production volume. */
@@ -188,6 +191,7 @@ class SnapshotStore(root: String, spark: SparkSession) {
       numBuckets: Int): Unit = {
     require(keyCols.nonEmpty && numBuckets > 0)
     df.write.mode("overwrite").format("parquet")
+      .option("path", s"$root/bucketed/$table")
       .bucketBy(numBuckets, keyCols.head, keyCols.drop(1): _*)
       .sortBy(keyCols.head, keyCols.drop(1): _*)
       .saveAsTable(table)

@@ -1,12 +1,14 @@
 package graft.stats
 
 import graft.SparkSuite
-import graft.functions.{TDigestSketch, TDigestState}
+import graft.stats.QuantileSketch.{quantile, rankBelow, sketch}
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 
-/** t-digest aggregate: accuracy in RANK space (the sketch's contract),
-  * exact tails, merge path, serde, and the null contract.
+/** The engine's KLL quantile path ([[QuantileSketch]] over Spark's
+  * built-in `kll_sketch_*`): accuracy in RANK space (the sketch's
+  * contract), exact extremes, the merge path, the null contract, the
+  * exclusive-rank bin edges, and the sketched drift distances.
   *
   * Rank-space check: an estimate `e` for quantile `q` passes when
   * `P(X < e) − eps ≤ q ≤ P(X ≤ e) + eps` — the interval form is what makes
@@ -16,14 +18,12 @@ import org.apache.spark.sql.functions._
 class TDigestSpec extends SparkSuite {
   import spark.implicits._
 
-  TDigestSketch.register(spark)
-
   private val qs = Seq(0.001, 0.01, 0.1, 0.25, 0.5, 0.75, 0.9, 0.99, 0.999)
 
-  /** max over qs of the rank-interval distance of the digest estimate */
-  private def maxRankErr(df: DataFrame, c: String, compression: Double): Double = {
-    val d = df.agg(TDigestSketch.tdigestSketch(col(c), compression).as("td"))
-    val ests = d.select(qs.map(q => TDigestSketch.tdigestQuantile(col("td"), q).as(s"e$q")): _*)
+  /** max over qs of the rank-interval distance of the sketch estimate */
+  private def maxRankErr(df: DataFrame, c: String): Double = {
+    val d = df.agg(sketch(col(c)).as("s"))
+    val ests = d.select(qs.map(q => quantile(col("s"), q).as(s"e$q")): _*)
       .head().toSeq.map(_.asInstanceOf[Double])
     val n = df.count().toDouble
     qs.zip(ests).map { case (q, e) =>
@@ -39,63 +39,44 @@ class TDigestSpec extends SparkSuite {
     spark.range(n).select((pmod(xxhash64(col("id")), lit(1000000)) / 1000.0).as("v"))
 
   test("rank error < 0.01 on 100k hashed-uniform doubles (compression 300)") {
-    assert(maxRankErr(uniformDf(100000), "v", 300) < 0.01)
+    assert(maxRankErr(uniformDf(100000), "v") < 0.01)
   }
 
   test("rank error bounded on a lognormal-ish skewed column") {
     val df = uniformDf(50000).select(exp(col("v") / 100.0).as("v"))
-    assert(maxRankErr(df, "v", 300) < 0.01)
+    assert(maxRankErr(df, "v") < 0.01)
   }
 
   test("rank-interval check passes on heavy discrete atoms (11 values, 9% mass each)") {
     val df = spark.range(110000).select((pmod(xxhash64(col("id")), lit(11)) / 100.0).as("v"))
-    assert(maxRankErr(df, "v", 300) < 0.01)
+    assert(maxRankErr(df, "v") < 0.01)
   }
 
   test("q=0 and q=1 return the exact min/max; tails are near-exact") {
     val df = uniformDf(20000)
     val Row(mn: Double, mx: Double) = df.agg(min("v"), max("v")).head()
-    val d = df.agg(TDigestSketch.tdigestSketch(col("v"), 100).as("td"))
-    val Row(e0: Double, e1: Double) = d.select(
-      TDigestSketch.tdigestQuantile(col("td"), 0.0),
-      TDigestSketch.tdigestQuantile(col("td"), 1.0)).head()
+    val Row(e0: Double, e1: Double) = df.agg(sketch(col("v")).as("s"))
+      .select(quantile(col("s"), 0.0), quantile(col("s"), 1.0)).head()
     assert(e0 == mn && e1 == mx)
   }
 
   test("merge path: 32-partition digest agrees with 1-partition digest within 0.01 rank") {
     val df = uniformDf(80000)
-    assert(maxRankErr(df.repartition(32), "v", 300) < 0.01)
-    assert(maxRankErr(df.coalesce(1), "v", 300) < 0.01)
-  }
-
-  test("weights are conserved and centroid count is bounded") {
-    val df = uniformDf(60000)
-    val Row(row: Row) = df.agg(TDigestSketch.tdigestSketch(col("v"), 100).as("td")).head()
-    val cents = row.getSeq[Row](2)
-    assert(math.abs(cents.map(_.getDouble(1)).sum - 60000.0) < 1e-6)
-    // k1 with unit budget compresses to ≲ δ centroids (2δ is the hard bound)
-    assert(cents.size <= 200, s"got ${cents.size} centroids for compression 100")
-  }
-
-  test("serde roundtrip preserves the state (past the internal buffer flush)") {
-    val agg = TDigestSketch(org.apache.spark.sql.catalyst.expressions.Literal(0.0), 50)
-    val st = agg.createAggregationBuffer()
-    (1 to 5000).foreach(i => st.add((i * 37 % 5000).toDouble)) // > 4δ values: flush path runs
-    val st2 = agg.deserialize(agg.serialize(st))
-    assert(st2.minV == st.minV && st2.maxV == st.maxV)
-    assert(st2.means.toSeq == st.means.toSeq && st2.weights.toSeq == st.weights.toSeq)
+    assert(maxRankErr(df.repartition(32), "v") < 0.01)
+    assert(maxRankErr(df.coalesce(1), "v") < 0.01)
   }
 
   test("NaNs and NULLs are skipped; an all-null group yields NULL") {
     val df = Seq(Some(1.0), None, Some(Double.NaN), Some(3.0)).toDF("v")
-    val Row(row: Row) = df.agg(TDigestSketch.tdigestSketch(col("v"), 50).as("td")).head()
-    assert(row.getDouble(0) == 1.0 && row.getDouble(1) == 3.0)
-    val allNull = Seq[Option[Double]](None, None).toDF("v")
-      .agg(TDigestSketch.tdigestSketch(col("v"), 50).as("td")).head()
-    assert(allNull.isNullAt(0))
-    val q = df.agg(TDigestSketch.tdigestSketch(col("v"), 50).as("td"))
-      .select(TDigestSketch.tdigestQuantile(col("td"), 0.5)).head().getDouble(0)
-    assert(q >= 1.0 && q <= 3.0)
+    val Row(n: Long, lo: Double, hi: Double) = df.agg(sketch(col("v")).as("s"))
+      .select(kll_sketch_get_n_double(col("s")), quantile(col("s"), 0.0), quantile(col("s"), 1.0))
+      .head()
+    assert(n == 2 && lo == 1.0 && hi == 3.0)
+    for (vs <- Seq(Seq[Option[Double]](None, None), Seq(Some(Double.NaN), None))) {
+      val r = vs.toDF("v").agg(sketch(col("v")).as("s"))
+        .select(quantile(col("s"), 0.5), rankBelow(col("s"), 1.0)).head()
+      assert(r.isNullAt(0) && r.isNullAt(1), s"$vs gave $r")
+    }
   }
 
   test("ColumnStats.quantileDigest: long shape, one row per (column, q), sane estimates") {
@@ -111,21 +92,33 @@ class TDigestSpec extends SparkSuite {
 
   test("cdf is the monotone inverse of quantile: cdf(quantile(q)) ≈ q") {
     val df = uniformDf(50000)
-    val d = df.agg(TDigestSketch.tdigestSketch(col("v"), 300).as("td"))
+    val d = df.agg(sketch(col("v")).as("s"))
     val qs2 = Seq(0.05, 0.25, 0.5, 0.75, 0.95)
-    val ests = d.select(qs2.map(q => TDigestSketch.tdigestQuantile(col("td"), q)): _*)
+    val ests = d.select(qs2.map(q => quantile(col("s"), q)): _*)
       .head().toSeq.map(_.asInstanceOf[Double])
-    val backs = d.select(qs2.indices.map(i =>
-      TDigestSketch.tdigestCdf(col("td"), ests(i))): _*)
+    val backs = d.select(qs2.indices.map(i => rankBelow(col("s"), ests(i))): _*)
       .head().toSeq.map(_.asInstanceOf[Double])
     qs2.zip(backs).foreach { case (q, b) =>
-      assert(math.abs(q - b) < 0.005, s"cdf(quantile($q)) = $b")
+      assert(math.abs(q - b) < 0.005, s"rank(quantile($q)) = $b")
     }
     // monotone + tail anchoring
-    val Row(c0: Double, c1: Double) = d.select(
-      TDigestSketch.tdigestCdf(col("td"), -1.0),
-      TDigestSketch.tdigestCdf(col("td"), 1e9)).head()
+    val Row(c0: Double, c1: Double) = d.select(rankBelow(col("s"), -1.0), rankBelow(col("s"), 1e9)).head()
     assert(c0 == 0.0 && c1 == 1.0)
+  }
+
+  test("bin-edge atoms: sketched bin masses equal the exact histogram's") {
+    // integer atoms on the width-8 edges of [0, 64), fewer rows than K so
+    // the sketch holds every value: each atom belongs to the bin it opens
+    // ([lo, hi) bins), which the inclusive built-in rank would get wrong
+    val n = QuantileSketch.K / 2
+    val df = spark.range(n).select(((col("id") % 9) * 8).cast("int").as("v"))
+    val (lo, hi, bins) = (0.0, 64.0, 8)
+    val exact = Drift.histogram(df, "v", lo, hi, bins).as[(Int, Long)].collect().toMap
+    val d = df.agg(sketch(col("v")).as("s"))
+    val edges = (1 until bins).map(i => rankBelow(col("s"), lo + i * (hi - lo) / bins))
+    val cdf = 0.0 +: d.select(edges: _*).head().toSeq.map(_.asInstanceOf[Double]) :+ 1.0
+    val sketched = (0 until bins).map(i => math.round((cdf(i + 1) - cdf(i)) * n))
+    assert(sketched === (0 until bins).map(i => exact.getOrElse(i, 0L)))
   }
 
   test("psiSketched/klSketched track the exact histogram PSI/KL on drifted data") {
@@ -161,14 +154,5 @@ class TDigestSpec extends SparkSuite {
     val b = uniformDf(40000).select((col("v") + 0.0).as("v"))
     val p = Drift.psiSketched(a, b, "v", 0, 1000, 10).head().getDouble(0)
     assert(math.abs(p) < 0.01, s"psi=$p")
-  }
-
-  test("SQL surface: tdigest_sketch/tdigest_quantile resolve through the registry") {
-    spark.range(1000).select((col("id") % 100).cast("double").as("v"))
-      .createOrReplaceTempView("td_sql_in")
-    val est = spark.sql(
-      "SELECT tdigest_quantile(tdigest_sketch(v, 100.0), 0.5D) AS m FROM td_sql_in")
-      .head().getDouble(0)
-    assert(est > 40 && est < 60)
   }
 }

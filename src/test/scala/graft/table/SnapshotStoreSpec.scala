@@ -117,6 +117,15 @@ class SnapshotStoreSpec extends SparkSuite {
     val want = dupPlain.as[(Long, Long)].collect().sortBy(_._1).toSeq
     assert(got === want)
     assert(got.size === 50) // ids 0..49 under %950 folding appear twice
+
+    // the table's files live in the store's layout, not the session
+    // warehouse, and an overwrite replaces them in place
+    val location = new java.io.File(spark.sessionState.catalog
+      .getTableMetadata(org.apache.spark.sql.catalyst.TableIdentifier(table)).location)
+    assert(location.getCanonicalPath === new java.io.File(s"$root/bucketed/$table").getCanonicalPath)
+    store.writeBucketed(df, table, Seq("doc_id"), numBuckets = 8)
+    assert(location.listFiles().exists(_.getName.endsWith(".parquet")))
+    assert(store.readBucketed(table).count() === 1000L)
     spark.sql(s"DROP TABLE IF EXISTS $table")
   }
 
