@@ -620,7 +620,7 @@ object SparkEntry {
       // north_star composed end to end: the KLL sketch as the STORED
       // snapshot artifact for distribution-drift checks — PSI/KL/JS
       // computed from two sketches via their exclusive ranks at the bin
-      // edges (Drift.psiSketched/klSketched/jsSketched) and judged against
+      // edges (Drift.sketchedDistances) and judged against
       // the exact histogram distances over the same binning. The sketch is
       // randomized, so the oracle pins the portable pair: the EXACT
       // distances plus the claim that the sketched ones landed within 0.01
@@ -632,13 +632,12 @@ object SparkEntry {
       val cur = li.where(col("l_shipdate") >= lit("1998-01-01").cast("timestamp"))
       val (c, lo, hi, bins) = ("l_extendedprice", 900.0, 105000.0, 20)
       def hist(d: DataFrame) = Drift.histogram(d, c, lo, hi, bins)
-      // six 1-row aggregates; the crossJoins are 1×1 result stitching
-      Drift.psi(hist(ref), hist(cur)).select(round(col("psi"), 6).as("psi_exact"))
-        .crossJoin(Drift.kl(hist(ref), hist(cur)).select(round(col("kl"), 6).as("kl_exact")))
-        .crossJoin(Drift.js(hist(ref), hist(cur)).select(round(col("js"), 6).as("js_exact")))
-        .crossJoin(Drift.psiSketched(ref, cur, c, lo, hi, bins).select(col("psi").as("psi_sk")))
-        .crossJoin(Drift.klSketched(ref, cur, c, lo, hi, bins).select(col("kl").as("kl_sk")))
-        .crossJoin(Drift.jsSketched(ref, cur, c, lo, hi, bins).select(col("js").as("js_sk")))
+      // two 1-row kernels (2 histograms, 2 sketches); the crossJoin is 1×1
+      // result stitching
+      Drift.distances(hist(ref), hist(cur)).select(round(col("psi"), 6).as("psi_exact"),
+          round(col("kl"), 6).as("kl_exact"), round(col("js"), 6).as("js_exact"))
+        .crossJoin(Drift.sketchedDistances(ref, cur, c, lo, hi, bins)
+          .select(col("psi").as("psi_sk"), col("kl").as("kl_sk"), col("js").as("js_sk")))
         .select(col("psi_exact"), col("kl_exact"), col("js_exact"),
           (abs(col("psi_sk") - col("psi_exact")) <= 0.01).as("psi_within_tol"),
           (abs(col("kl_sk") - col("kl_exact")) <= 0.01).as("kl_within_tol"),

@@ -21,6 +21,10 @@ import scala.collection.mutable
   * partial aggregation collapses each map task to ≤ K entries per query
   * BEFORE the shuffle, so the exchange carries O(map-tasks · K) rows per
   * query instead of all N, and no task ever sorts more than K entries.
+  * Spark 4.1's internal `CollectTopK` gives the same answers (NaN, ±0.0,
+  * NULL scores, `Long.MinValue` ids and ties included) but took about 2×
+  * as long on 8M rows over 64 groups at local[4] (1,111 vs 560 ms, minimum
+  * times), and SQL cannot name it, so this heap stays.
   *
   * Ordering parity with the windows it replaces (bit-exact, so results
   * are identical):

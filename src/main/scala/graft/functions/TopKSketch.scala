@@ -24,6 +24,9 @@ import scala.collection.mutable
   * merges associatively — partial aggregation collapses each map task to
   * ≤ K entries per group BEFORE the shuffle, so the exchange carries
   * O(tasks · K) rows per rule no matter how many violations exist.
+  * Spark 4.1's internal `CollectTopK` gives the same answers but took about
+  * 2× as long on 8M rows over 64 groups at local[4] (1,191–1,296 vs
+  * 554–720 ms, minimum times), and SQL cannot name it, so this heap stays.
   *
   * Determinism: the key is a content hash supplied by the caller, ties
   * break on the payload string — the result is a pure function of the data,

@@ -197,7 +197,7 @@ object Dedup {
       // Window.partitionBy(id)` pushed every surviving posting through a
       // second full exchange before the self-join exchanged them again —
       // at cluster scale the posting bytes dominate the counter/pair-side
-      // joins added here (measured A/B in ComponentBench; an array-domain
+      // joins added here (measured A/B; an array-domain
       // `array_except` variant avoids all extra exchanges but re-builds
       // the frequent-set hash per row — 40% slower even locally)
       val sizes = kept.groupBy("id").agg(count(lit(1)).as("n"))
@@ -217,12 +217,6 @@ object Dedup {
   sealed trait HashFamily
   case object Md5Portable extends HashFamily
   case object XxFast extends HashFamily
-
-  /** 32-bit term hash of the legacy SimHash. */
-  private def seededHash(s: Column, fam: HashFamily): Column = fam match {
-    case Md5Portable => md5Hash32(s, 0)
-    case XxFast      => xxhash64(lit(0), s)
-  }
 
   /** MinHash signatures `(id, sig_0 … sig_{k-1})`: min over the document's
     * distinct shingle set of k independent seeded hash functions.
@@ -568,8 +562,8 @@ object Dedup {
 
   /** 64-bit word hash. Md5Portable packs BOTH 32-bit hex windows of ONE md5
     * into (window0 << 32) | window1 — codegen subexpression elimination
-    * dedups the digest, so the 64-bit hash costs the same one md5 as the
-    * 32-bit one. Portable: DuckDB reads the same two windows
+    * dedups the digest, so the 64-bit hash costs the same one md5 as
+    * [[md5Hash32]]. Portable: DuckDB reads the same two windows
     * (`('0x'||substr(md5(s),1,8))::BIGINT` and `…,9,8…`) and addresses bits
     * 0-31 in the low window, 32-63 in the high one (a single 16-hex-char
     * cast overflows DuckDB's signed BIGINT, so the halves stay separate
@@ -587,35 +581,10 @@ object Dedup {
   private def fingerprintBit(vote: Column, b: Int): Column =
     when(vote > 0, lit(if (b == 63) Long.MinValue else 1L << b)).otherwise(lit(0L))
 
-  /** 32-bit SimHash over whitespace tokens: bit b of the fingerprint is the
-    * sign of Σ_tokens (2·bit_b(h(token)) − 1). Hamming-near fingerprints =
-    * near-duplicate documents. Pure per-row expression.
-    *
-    * LEGACY WIDTH — kept for API compatibility only: at 10⁹ docs a 32-bit
-    * fingerprint makes unrelated documents collide within Hamming ≤ 3 by
-    * birthday statistics alone (≈1.3e-6 per pair ⇒ ~10¹² false merges over
-    * N²/2 pairs), and its byte bands give only 256 buckets. Use
-    * [[simhash64]] / [[simhashSignatures64]] (Manku et al., WWW'07 use
-    * 64-bit fingerprints for exactly this reason). */
-  def simhash32(text: Column): Column = {
-    val ws = TextAnalysis.words(text)
-    val hashes = transform(ws, w => md5Hash32(w, 0))
-    val bits = (0 until 32).map { b =>
-      val vote = aggregate(hashes, lit(0L),
-        (acc, h) => acc + when(shiftright(h, b).bitwiseAND(1) === 1, 1L).otherwise(-1L))
-      when(vote > 0, lit(1L) * (1L << b)).otherwise(lit(0L))
-    }
-    bits.reduce(_ + _)
-  }
-
-  /** Hamming distance between two simhash fingerprints (any width — XOR +
-    * popcount is sign-agnostic). */
-  def hamming32(a: Column, b: Column): Column =
+  /** Hamming distance between two 64-bit simhash fingerprints: XOR +
+    * popcount (`bit_count` counts over the full two's-complement long). */
+  def hamming64(a: Column, b: Column): Column =
     bit_count(a.bitwiseXOR(b))
-
-  /** Alias of [[hamming32]] for the 64-bit family (same expression;
-    * `bit_count` counts over the full two's-complement long). */
-  def hamming64(a: Column, b: Column): Column = hamming32(a, b)
 
   /** 64-bit SimHash, per-row expression form (narrow selections only — the
     * token-hash array re-evaluates once per bit; use
@@ -660,52 +629,12 @@ object Dedup {
           .reduce(_ bitwiseOR _).as("simhash"))
   }
 
-  /** Explode-based SimHash `(id, simhash)` — the corpus-scale path: each
-    * token hashes once, 32 conditional sums ride one partial aggregation
-    * (the per-row [[simhash32]] expression re-evaluates the token-hash array
-    * once per bit, fine for narrow selections, wasteful over a corpus). */
-  def simhashSignatures(df: DataFrame, idCol: String, textCol: String,
-      family: HashFamily = Md5Portable): DataFrame = {
-    val h = df.select(col(idCol).as("id"),
-        explode(TextAnalysis.words(col(textCol))).as("word"))
-      .select(col("id"), seededHash(col("word"), family).as("hv"))
-    val votes = (0 until 32).map(b =>
-      sum(when(shiftright(col("hv"), b).bitwiseAND(1) === 1, 1L).otherwise(-1L)).as(s"v_$b"))
-    h.groupBy("id").agg(votes.head, votes.tail: _*)
-      .select(col("id"),
-        (0 until 32).map(b => when(col(s"v_$b") > 0, lit(1L << b)).otherwise(lit(0L)))
-          .reduce(_ + _).as("simhash"))
-  }
-
-  /** SimHash near-dup PAIRS via byte banding over the LEGACY 32-bit
-    * fingerprint — 8-bit bands give only 256 buckets/band, so even a
-    * uniform corpus pays Σ|bucket|² ≳ N²/256 candidate pairs: fine at
-    * sample scale, NOT a 10⁹-doc plan. Use [[simhashNearDupPairs64]]
-    * (65,536 buckets/band, same pigeonhole-exact recall for Hamming ≤ 3).
-    * Pigeonhole: 3 differing bits touch at most 3 of the 4 bands, so every
-    * true pair collides somewhere — no pair is missed. */
-  def simhashNearDupPairs(df: DataFrame, idCol: String, textCol: String,
-      maxHamming: Int = 3, family: HashFamily = Md5Portable): DataFrame = {
-    require(maxHamming <= 3, "4-band pigeonhole guarantees recall only for maxHamming <= 3")
-    val sigs = simhashSignatures(df, idCol, textCol, family)
-    val bands = sigs.select(col("id"), col("simhash"),
-        explode(array((0 until 4).map(b =>
-          struct(lit(b).as("b"), shiftright(col("simhash"), 8 * b).bitwiseAND(0xff).as("v"))): _*)).as("e"))
-      .select(col("id"), col("simhash"), col("e.b").as("b"), col("e.v").as("v"))
-    val x = bands.select(col("id").as("id_a"), col("simhash").as("sa"), col("b"), col("v"))
-    val y = bands.select(col("id").as("id_b"), col("simhash").as("sb"), col("b"), col("v"))
-    x.join(y, Seq("b", "v")).where(col("id_a") < col("id_b"))
-      .select(col("id_a"), col("id_b"), hamming32(col("sa"), col("sb")).as("hamming"))
-      .distinct()
-      .where(col("hamming") <= maxHamming)
-  }
-
   /** SimHash near-dup PAIRS over the 64-bit fingerprint with 4×16-bit
     * bands — the corpus-scale form (Manku et al., WWW'07). Pigeonhole makes
     * recall EXACT for `maxHamming ≤ 3` (3 differing bits touch ≤ 3 of the
     * 4 bands), and each band has 65,536 bucket values, so a uniform corpus
-    * pays Σ|bucket|² ≈ N²/65,536 per band — 256× less than the byte-banded
-    * 32-bit form, with birthday-safe fingerprints on top.
+    * pays Σ|bucket|² ≈ N²/65,536 per band — 256× less than byte bands
+    * over a 32-bit fingerprint, with birthday-safe fingerprints on top.
     *
     * `expectedDocs`: pass the (approximate) corpus size to run the
     * [[lintBanding]] capacity check at plan-build time — warnings land on
@@ -1013,12 +942,13 @@ object Dedup {
           " ").cast("binary")).as("clean_checksum"))
   }
 
-  /** Banding-capacity lint (the 32-bit-SimHash lesson generalized): with N
-    * docs hashed into 2^bandBits buckets per band, expected occupancy is
-    * N/2^bandBits and the candidate join pays ≥ N²/2^bandBits pairs per
-    * band even on a perfectly uniform corpus. Returns warnings when the
-    * expected occupancy exceeds `maxExpectedOccupancy` (default 1024 —
-    * a 1024-doc bucket costs ~½M candidate pairs); empty = sized fine.
+  /** Banding-capacity lint (why byte bands over a 32-bit SimHash fail at
+    * scale, generalized): with N docs hashed into 2^bandBits buckets per
+    * band, expected occupancy is N/2^bandBits and the candidate join pays
+    * ≥ N²/2^bandBits pairs per band even on a perfectly uniform corpus.
+    * Returns warnings when the expected occupancy exceeds
+    * `maxExpectedOccupancy` (default 1024 — a 1024-doc bucket costs ~½M
+    * candidate pairs); empty = sized fine.
     * Pure function so callers (and tests) can gate on it; the banded
     * operators invoke it via their `expectedDocs` parameter. */
   def lintBanding(nDocs: Long, bandBits: Int, bands: Int,

@@ -12,13 +12,15 @@ import org.apache.spark.sql.functions._
   * counts are exact integers (deterministic across partitionings and
   * engines); only the final PSI/KL arithmetic is floating point.
   *
-  * For quantile-based drift the stored snapshot artifact is a KLL sketch
-  * ([[QuantileSketch]], Spark's built-in `kll_sketch_*`):
-  * [[psiSketched]]/[[klSketched]]/[[jsSketched]] compute the drift
-  * distance from two sketches via their ranks at the bin edges, without
-  * rescanning either snapshot. The built-in `percentile_approx`
-  * (Greenwald–Khanna `QuantileSummaries`) remains available where only
-  * point quantiles are needed.
+  * One kernel per input shape computes all three distances in one
+  * aggregate: [[distances]] over two histograms, [[sketchedDistances]]
+  * over two KLL sketches ([[QuantileSketch]], Spark's built-in
+  * `kll_sketch_*`) read at the bin edges. [[psi]]/[[kl]]/[[js]] and
+  * [[psiSketched]]/[[klSketched]]/[[jsSketched]] select one column of
+  * them; ColumnPruning drops the other two sums, so one distance computes
+  * one sum. [[psiByGroup]] runs the same sums per group. The built-in
+  * `percentile_approx` (Greenwald–Khanna `QuantileSummaries`) remains
+  * available where only point quantiles are needed.
   */
 object Drift {
 
@@ -33,41 +35,42 @@ object Drift {
       .agg(count(lit(1)).as("n"))
   }
 
-  /** Same histogram via the custom [[graft.functions.HistogramSketch]]
-    * aggregate: one aggregation, no per-bin shuffle rows — preferable inside
-    * a wider `agg(...)` (e.g. per-source sketches next to other stats).
-    * Empty bins are dropped to match [[histogram]]'s shape. */
-  def histogramOnePass(df: DataFrame, valueCol: String, lo: Double, hi: Double, bins: Int): DataFrame = {
-    graft.functions.HistogramSketch.register(df.sparkSession)
-    df.agg(graft.functions.HistogramSketch
-        .histogramSketch(col(valueCol), lo, hi, bins).as("h"))
-      .select(posexplode(col("h")).as(Seq("bin", "n")))
-      .where(col("n") > 0)
-  }
+  /** PSI, KL(P‖Q) and Jensen–Shannon divergence between two histograms
+    * over the same binning, as one row `(psi, kl, js)`: one full-outer join
+    * of the epsilon-clamped proportions (standard practice so empty bins
+    * don't blow up the log) and one aggregate of three sums.
+    *  - PSI = `sum((p-q) * ln(p/q))`; PSI > 0.2 is the usual "significant
+    *    shift" alert threshold.
+    *  - KL = `sum(p * ln(p/q))`.
+    *  - JS = `0.5·KL(P‖M) + 0.5·KL(Q‖M)` with `M = (P+Q)/2`: the symmetric,
+    *    bounded (≤ ln 2) member of the family, the usual alerting
+    *    complement to the unbounded KL/PSI (a new mode appearing in Q moves
+    *    JS smoothly instead of exploding). */
+  def distances(reference: DataFrame, current: DataFrame, eps: Double = 1e-6): DataFrame =
+    distanceSums(joinedProportions(reference, current, eps))
 
-  /** PSI between two histograms over the same binning:
-    * `sum((p-q) * ln(p/q))` with epsilon-clamped proportions (standard
-    * practice so empty bins don't blow up the log). PSI > 0.2 is the usual
-    * "significant shift" alert threshold. */
+  /** PSI alone; see [[distances]]. */
   def psi(reference: DataFrame, current: DataFrame, eps: Double = 1e-6): DataFrame =
-    joinedProportions(reference, current, eps)
-      .agg(sum((col("p") - col("q")) * log(col("p") / col("q"))).as("psi"))
+    distances(reference, current, eps).select("psi")
 
-  /** KL(P || Q) with the same clamping. */
+  /** KL(P || Q) alone; see [[distances]]. */
   def kl(reference: DataFrame, current: DataFrame, eps: Double = 1e-6): DataFrame =
-    joinedProportions(reference, current, eps)
-      .agg(sum(col("p") * log(col("p") / col("q"))).as("kl"))
+    distances(reference, current, eps).select("kl")
 
-  /** Jensen–Shannon divergence: `0.5·KL(P‖M) + 0.5·KL(Q‖M)` with
-    * `M = (P+Q)/2` — the symmetric, bounded (≤ ln 2) member of the drift
-    * family, the usual alerting complement to the unbounded KL/PSI (a new
-    * mode appearing in Q moves JS smoothly instead of exploding). Same
-    * epsilon-clamped proportions over the shared binning. */
+  /** Jensen–Shannon divergence alone; see [[distances]]. */
   def js(reference: DataFrame, current: DataFrame, eps: Double = 1e-6): DataFrame =
-    joinedProportions(reference, current, eps)
-      .select(col("p"), col("q"), ((col("p") + col("q")) / 2).as("m"))
-      .agg(sum(col("p") * log(col("p") / col("m")) * 0.5
-        + col("q") * log(col("q") / col("m")) * 0.5).as("js"))
+    distances(reference, current, eps).select("js")
+
+  /** The three distance sums over per-bin clamped proportions `(p, q)`,
+    * one row per `by` group (one row in all without `by`). */
+  private def distanceSums(pq: DataFrame, by: Column*): DataFrame = {
+    val (p, q) = (col("p"), col("q"))
+    val m = (p + q) / 2
+    pq.groupBy(by: _*).agg(
+      sum((p - q) * log(p / q)).as("psi"),
+      sum(p * log(p / q)).as("kl"),
+      sum(p * log(p / m) * 0.5 + q * log(q / m) * 0.5).as("js"))
+  }
 
   private def joinedProportions(reference: DataFrame, current: DataFrame, eps: Double): DataFrame = {
     val p = proportions(reference).withColumnRenamed("prop", "p")
@@ -115,13 +118,12 @@ object Drift {
       .select(col("bin"), greatest(col("prop"), lit(eps)).as("q"))
     // grid = every group × every globally-occupied bin, so a bin a group
     // never hit still contributes its clamped (eps vs q) term
-    gt.crossJoin(broadcast(q))
+    val grid = gt.crossJoin(broadcast(q))
       .join(gh, Seq("grp", "bin"), "left")
       .select(col("grp"),
         greatest(coalesce(col("n"), lit(0L)).cast("double") / col("t"), lit(eps)).as("p"),
         col("q"))
-      .groupBy("grp")
-      .agg(sum((col("p") - col("q")) * log(col("p") / col("q"))).as("psi"))
+    distanceSums(grid, col("grp")).select("grp", "psi")
   }
 
   /** Per-bin (p, q) proportions derived from two KLL SKETCHES instead of
@@ -130,9 +132,9 @@ object Drift {
     * the bins are `[lo, hi)` like [[histogram]]'s; edge bins absorb the
     * tails (rank is monotone, so masses are non-negative and sum to 1 — the
     * same clamp contract as [[histogram]]). Each snapshot is ONE sketch
-    * aggregation (O(K log(n/K)) state), and the drift arithmetic runs on
-    * the two stored artifacts — re-checking against a month of snapshots
-    * rescans nothing. */
+    * aggregation (O(K log(n/K)) state) and the drift arithmetic runs on the
+    * two sketch rows. Every call aggregates both snapshots again: nothing
+    * here reads a stored sketch column. */
   private def digestProportions(reference: DataFrame, current: DataFrame,
       valueCol: String, lo: Double, hi: Double, bins: Int, eps: Double): DataFrame = {
     val rd = reference.agg(QuantileSketch.sketch(col(valueCol)).as("dref"))
@@ -153,28 +155,29 @@ object Drift {
         greatest(col("s.q"), lit(eps)).as("q"))
   }
 
-  /** PSI computed from two KLL sketches (see [[digestProportions]]);
-    * agrees with the exact [[psi]] to within the sketch's rank error —
-    * pinned by spec and by the v47 oracle's tolerance verdict. */
+  /** PSI, KL and JS as one row `(psi, kl, js)` from two KLL sketches (see
+    * [[digestProportions]]): one sketch aggregation per snapshot feeds all
+    * three. Agrees with the exact [[distances]] to within the sketch's rank
+    * error — pinned by spec and by the v47 oracle's tolerance verdict. */
+  def sketchedDistances(reference: DataFrame, current: DataFrame, valueCol: String,
+      lo: Double, hi: Double, bins: Int, eps: Double = 1e-6): DataFrame =
+    distanceSums(digestProportions(reference, current, valueCol, lo, hi, bins, eps))
+
+  /** PSI alone from two KLL sketches; see [[sketchedDistances]]. */
   def psiSketched(reference: DataFrame, current: DataFrame, valueCol: String,
       lo: Double, hi: Double, bins: Int, eps: Double = 1e-6): DataFrame =
-    digestProportions(reference, current, valueCol, lo, hi, bins, eps)
-      .agg(sum((col("p") - col("q")) * log(col("p") / col("q"))).as("psi"))
+    sketchedDistances(reference, current, valueCol, lo, hi, bins, eps).select("psi")
 
-  /** KL(P || Q) from two KLL sketches. */
+  /** KL(P || Q) alone from two KLL sketches; see [[sketchedDistances]]. */
   def klSketched(reference: DataFrame, current: DataFrame, valueCol: String,
       lo: Double, hi: Double, bins: Int, eps: Double = 1e-6): DataFrame =
-    digestProportions(reference, current, valueCol, lo, hi, bins, eps)
-      .agg(sum(col("p") * log(col("p") / col("q"))).as("kl"))
+    sketchedDistances(reference, current, valueCol, lo, hi, bins, eps).select("kl")
 
-  /** Jensen–Shannon divergence from two KLL sketches — the bounded
-    * symmetric member, same shape as [[js]]. */
+  /** Jensen–Shannon divergence alone from two KLL sketches; see
+    * [[sketchedDistances]]. */
   def jsSketched(reference: DataFrame, current: DataFrame, valueCol: String,
       lo: Double, hi: Double, bins: Int, eps: Double = 1e-6): DataFrame =
-    digestProportions(reference, current, valueCol, lo, hi, bins, eps)
-      .select(col("p"), col("q"), ((col("p") + col("q")) / 2).as("m"))
-      .agg(sum(col("p") * log(col("p") / col("m")) * 0.5
-        + col("q") * log(col("q") / col("m")) * 0.5).as("js"))
+    sketchedDistances(reference, current, valueCol, lo, hi, bins, eps).select("js")
 
   /** Drift verdict in the violation-row shape: fires when PSI exceeds
     * `threshold`. */

@@ -76,9 +76,9 @@ object AuditCli {
       store.lineage("audit-run").orderBy("partition").show(20, truncate = false)
     }
 
-    println("-- drift vs reference window (first half vs second half; one-pass custom sketch):")
-    val h1 = Drift.histogramOnePass(facts.where(col("doc_id") < format_string("doc-%012d", lit(n / 2))), "n_tok", 0, maxLen.toDouble, 32)
-    val h2 = Drift.histogramOnePass(facts.where(col("doc_id") >= format_string("doc-%012d", lit(n / 2))), "n_tok", 0, maxLen.toDouble, 32)
+    println("-- drift vs reference window (first half vs second half):")
+    val h1 = Drift.histogram(facts.where(col("doc_id") < format_string("doc-%012d", lit(n / 2))), "n_tok", 0, maxLen.toDouble, 32)
+    val h2 = Drift.histogram(facts.where(col("doc_id") >= format_string("doc-%012d", lit(n / 2))), "n_tok", 0, maxLen.toDouble, 32)
     Drift.psiRule(h1, h2, "drift:n_tok").show(truncate = false)
 
     println(f"== audit wall time: ${(System.nanoTime() - t0) / 1e9}%.1f s ==")

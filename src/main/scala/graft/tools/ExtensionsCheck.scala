@@ -3,23 +3,24 @@ package graft.tools
 import org.apache.spark.sql.SparkSession
 
 /** Smoke check for the `--conf spark.sql.extensions=graft.GraftExtensions`
-  * launch path: the session must resolve `histogram_sketch` WITHOUT any
-  * driver-side registration. Run via:
+  * launch path: the session must resolve every injected function WITHOUT
+  * any driver-side registration. Run via:
   * {{{
   *   tools/submit.sh graft.tools.ExtensionsCheck 4
   * }}}
-  * (submit.sh passes the extensions conf; prints EXTOK + the histogram.)
+  * (submit.sh passes the extensions conf; prints EXTOK + each result.)
   */
 object ExtensionsCheck {
   def main(args: Array[String]): Unit = {
     // deliberately NOT GraftSession: prove the conf alone wires the function
     val spark = SparkSession.builder().appName("graft-ext-check").getOrCreate()
     spark.range(100).createOrReplaceTempView("nums")
-    val counts = spark.sql(
-      "SELECT histogram_sketch(CAST(id AS DOUBLE), 0, 100, 4) AS h FROM nums")
-      .head().getSeq[Long](0)
-    require(counts.sum == 100L && counts.forall(_ == 25L), s"bad sketch: $counts")
-    // and the codegen'd dot product, from pure SQL (no driver registration)
+    // the bounded top-K aggregate: the 3 smallest keys, payloads in key order
+    val top = spark.sql(
+      "SELECT topk_sketch(99 - id, CAST(id AS STRING), 3) AS t FROM nums")
+      .head().getSeq[String](0)
+    require(top == Seq("99", "98", "97"), s"bad topk_sketch: $top")
+    // the codegen'd dot product, from pure SQL (no driver registration)
     val d = spark.sql(
       "SELECT graft_dot(array(CAST(1.0 AS FLOAT), CAST(2.0 AS FLOAT)), " +
         "array(CAST(3.0 AS FLOAT), CAST(4.0 AS FLOAT))) AS d")
@@ -36,7 +37,7 @@ object ExtensionsCheck {
         "NOT rfc3339_check('2023-02-29', 'date') AND rfc3339_check('10:00:00Z', 'time') AS ok")
       .head().getBoolean(0)
     require(rfc, "bad rfc3339_check")
-    println(s"EXTOK ${counts.mkString(",")} dot=$d minhash=$mh rfc3339=$rfc")
+    println(s"EXTOK topk=${top.mkString(",")} dot=$d minhash=$mh rfc3339=$rfc")
     spark.stop()
   }
 }

@@ -457,4 +457,23 @@ class PlanAuditSpec extends SparkSuite {
       }, plan)
     }
   }
+
+  test("sketched drift aggregates each snapshot once: two KLL sketches, unused sums pruned") {
+    // sketchedDistances feeds PSI, KL and JS from one sketch per snapshot;
+    // psiSketched selects one column of it, so ColumnPruning must leave the
+    // same two sketches and drop the KL and JS sums
+    import graft.stats.Drift
+    import org.apache.spark.sql.catalyst.expressions.aggregate.{KllSketchAggDouble, Sum}
+    import org.apache.spark.sql.functions.col
+    val li = spark.read.parquet(s"$dir/lineitem.parquet")
+    val (ref, cur) = (li.where(col("l_linenumber") < 4), li.where(col("l_linenumber") >= 4))
+    for ((df, sums) <- Seq(
+        Drift.sketchedDistances(ref, cur, "l_extendedprice", 900.0, 105000.0, 20) -> 3,
+        Drift.psiSketched(ref, cur, "l_extendedprice", 900.0, 105000.0, 20) -> 1)) {
+      val plan = df.queryExecution.optimizedPlan
+      val exprs = plan.flatMap(_.expressions.flatMap(_.collect { case e => e }))
+      assert(exprs.count(_.isInstanceOf[KllSketchAggDouble]) === 2, plan)
+      assert(exprs.count(_.isInstanceOf[Sum]) === sums, plan)
+    }
+  }
 }

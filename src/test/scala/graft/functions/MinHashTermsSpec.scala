@@ -101,6 +101,19 @@ class MinHashTermsSpec extends SparkSuite {
         1006L -> None))
   }
 
+  test("GraftExtensions injects minhash_terms") {
+    // extensions apply at SESSION CREATION — the suite's shared session
+    // predates any conf, so the full `--conf spark.sql.extensions=…` path
+    // is exercised via spark-submit (tools/submit.sh + ExtensionsCheck);
+    // here the injection must register without error, and the builder it
+    // injects (the one register() installs) must answer through SQL
+    new graft.GraftExtensions().apply(new org.apache.spark.sql.SparkSessionExtensions)
+    MinHashTerms.register(spark)
+    assert(spark.sql(
+      "SELECT minhash_terms(array(1, 2, 3), 3, 2, 'xxhash64')[1] = xxhash64(1, '1 2 3')")
+      .head().getBoolean(0))
+  }
+
   test("SQL form: minhash_terms(terms, k, numHashes, family) and its argument checks") {
     MinHashTerms.register(spark)
     val viaSql = tokenDocs.selectExpr("doc_id", "minhash_terms(tokens, 3, 4, 'xxhash64') AS s")

@@ -8,14 +8,6 @@ class PipelineSpec extends SparkSuite {
 
   private lazy val docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
 
-  test("explode-based simhash equals the per-row expression") {
-    val perRow = docs.select(col("doc_id").as("id"), Dedup.simhash32(col("text")).as("simhash"))
-      .orderBy("id").as[(Long, Long)].collect().toSeq
-    val agg = Dedup.simhashSignatures(docs, "doc_id", "text")
-      .orderBy("id").as[(Long, Long)].collect().toSeq
-    assert(perRow === agg)
-  }
-
   test("explode-based simhash64 equals the per-row expression and uses all 64 bits") {
     val perRow = docs.select(col("doc_id").as("id"), Dedup.simhash64(col("text")).as("simhash"))
       .orderBy("id").as[(Long, Long)].collect().toSeq
@@ -29,9 +21,9 @@ class PipelineSpec extends SparkSuite {
   }
 
   test("banding capacity lint warns when expected bucket occupancy blows up") {
-    // 10^9 docs over 8-bit bands (the legacy simhash32 shape): ~4M docs per
-    // bucket — must warn, and the message must carry the numbers a user
-    // needs to resize
+    // 10^9 docs over 8-bit bands (byte bands of a 32-bit fingerprint):
+    // ~4M docs per bucket — must warn, and the message must carry the
+    // numbers a user needs to resize
     val w = Dedup.lintBanding(1000000000L, bandBits = 8, bands = 4)
     assert(w.nonEmpty && w.head.contains("8 bits"))
     assert(w.head.contains("widen the bands"))
