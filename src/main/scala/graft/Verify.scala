@@ -1,21 +1,28 @@
 package graft
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
+
+  /** The queries a run covers: every query when `names` is empty, else
+    * exactly the named ones. Fails, naming each, on a name that is not a
+    * query, so a typo cannot silently drop a query from the dump. */
+  def select(names: Seq[String]): Map[String, (SparkSession, String) => DataFrame] = {
+    val unknown = names.filterNot(SparkEntry.queries.contains)
+    require(unknown.isEmpty, s"unknown query: ${unknown.mkString(", ")}")
+    if (names.isEmpty) SparkEntry.queries else SparkEntry.queries.view.filterKeys(names.toSet).toMap
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = args(0)
     val outDir = args(1)
     // optional extra args: run only these query names (local iteration);
-    // the driver passes exactly two args → full sweep, unchanged
-    val only = args.drop(2).toSet
+    // two args → the full sweep. Checked before the session starts.
+    val queries = select(args.toSeq.drop(2))
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val spark = GraftSession.get(cpus, "graft-verify")
     new java.io.File(outDir).mkdirs()
-    val queries =
-      if (only.isEmpty) SparkEntry.queries
-      else SparkEntry.queries.view.filterKeys(only).toMap
     queries.foreach { case (name, fn) =>
       try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
         .parquet(s"$outDir/$name")
@@ -36,7 +43,7 @@ object Verify {
       case c => c.toString
     } + "\""
     val json = SparkEntry.oracleSql
-      .filter { case (k, _) => only.isEmpty || only(k) }
+      .filter { case (k, _) => queries.contains(k) }
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     spark.stop()

@@ -5,11 +5,19 @@ import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
-/** Compiles a [[Rule]] tree into a single Catalyst `Column` holding the
-  * error list for the target value: `array<struct<path, rule_id, category,
-  * message, observed>>` — the columnar analog of the reference's
-  * `@errors` list of `JSON::Validator::Error` objects
-  * (reference lib/JSON/Validator/Schema.pm:366-420 `_validate`).
+/** Compiles a [[Rule]] tree into Catalyst `Column`s in two tiers, from one
+  * traversal of the tree ([[Tiers]]):
+  *  - `pass`: a non-NULL boolean, TRUE exactly when the value has no error.
+  *    It carries no strings and no structs, so a verdict that reads only
+  *    `pass` never builds an error.
+  *  - `errs`: the error list for the target value, `array<struct<path,
+  *    rule_id, category, message, observed>>` — the columnar analog of the
+  *    reference's `@errors` list of `JSON::Validator::Error` objects
+  *    (reference lib/JSON/Validator/Schema.pm:366-420 `_validate`).
+  * Every gate that asks "did this sub-rule fail?" (a keyword group in one
+  * schema object, `not`, `if`/`then`/`else`, `anyOf`/`oneOf`, `contains`)
+  * reads the sub-rule's `pass`, never the size of its error list, so no
+  * error expression is inlined twice.
   *
   * Everything is pure Catalyst expressions (no UDFs): rules on array
   * elements use higher-order functions (`transform`/`filter`), so the whole
@@ -17,6 +25,11 @@ import org.apache.spark.sql.types._
   * is a pure function of (rule, input DataType); type dispatch happens at
   * compile time — the reference's runtime `data_type` sniffing
   * (Util.pm:58-72) is free here because the DataFrame schema is static.
+  *
+  * A whole row is compiled by [[compileRow]]: its fields are the DataFrame's
+  * own columns, so a root property compiles to the column itself, not to a
+  * field of a struct of every column (each such struct copy is analyzed,
+  * then folded away by the optimizer).
   *
   * Error semantics ported:
   *  - type errors suppress sibling keyword errors (Schema.pm:410 early
@@ -37,7 +50,27 @@ object RuleCompiler {
     StructField("observed", StringType)))
   val errArrayType: ArrayType = ArrayType(errStructType)
 
-  def noErrors: Column = typedlit(Seq.empty[Err])
+  /** The empty error list: one literal, built once. */
+  val noErrors: Column = typedlit(Seq.empty[Err])
+
+  /** A compiled rule: `pass` is a non-NULL boolean, TRUE exactly when
+    * `errs` is empty. `errs` is built on its first read, so a caller that
+    * reads only `pass` never builds an error expression. */
+  final class Tiers(val pass: Column, errors: => Column) {
+    lazy val errs: Column = errors
+  }
+
+  private val passes = new Tiers(lit(true), noErrors)
+
+  /** The value a rule applies to. At the root of a row the value is the row
+    * itself: it is never NULL, and its fields are the DataFrame's columns. */
+  private final case class Target(value: Column, root: Boolean = false) {
+    def field(name: String): Column = if (root) column(name) else value.getField(name)
+    def isNull: Column = if (root) lit(false) else value.isNull
+    /** The conjunction of `subs`, with no error on a NULL (absent) value. */
+    def skipNull(subs: Seq[Tiers]): Tiers =
+      if (subs.isEmpty) passes else if (root) conj(subs) else RuleCompiler.skipNull(value, conj(subs))
+  }
 
   private def mkErr(path: Column, ruleId: String, category: Column, message: Column, observed: Column): Column =
     struct(
@@ -46,10 +79,29 @@ object RuleCompiler {
 
   private def one(e: Column): Column = array(e)
 
+  /** `errs` when `pass` is not TRUE. */
+  private def unless(pass: Column, errs: => Column): Tiers =
+    new Tiers(pass, when(pass, noErrors).otherwise(errs))
+
   /** `when(ok) pass else [err]` with null-skip: JSON-Schema value keywords
-    * don't apply to null/missing values (the `type` keyword reports those). */
-  private def check(ok: Column, e: Column, target: Column): Column =
-    when(target.isNull || ok, noErrors).otherwise(one(e))
+    * don't apply to null/missing values (the `type` keyword reports those).
+    * `ok` may be NULL (a NULL enum constant, a custom predicate), which
+    * fails, as the error branch of `when` does. */
+  private def check(ok: Column, e: => Column, t: Target): Tiers = {
+    val skip = t.isNull || ok
+    new Tiers(coalesce(skip, lit(false)), when(skip, noErrors).otherwise(one(e)))
+  }
+
+  /** No error where `value` is NULL, else those of `t`. */
+  private def skipNull(value: Column, t: Tiers): Tiers =
+    new Tiers(value.isNull || t.pass, when(value.isNull, noErrors).otherwise(t.errs))
+
+  /** Conjunction: passes when every part passes; errors in part order. */
+  private def conj(ts: Seq[Tiers]): Tiers = ts match {
+    case Seq()  => passes
+    case Seq(t) => t
+    case _      => new Tiers(ts.map(_.pass).reduce(_ && _), concat(ts.map(_.errs): _*))
+  }
 
   final case class Ctx(
       formats: Formats.Registry = Formats.Registry(),
@@ -105,44 +157,65 @@ object RuleCompiler {
   }
 
   /** Entry point: error-array column for `rule` applied to `target`. */
-  def compile(rule: Rule, dt: DataType, target: Column, path: Column, ctx: Ctx = Ctx()): Column = {
+  def compile(rule: Rule, dt: DataType, target: Column, path: Column, ctx: Ctx = Ctx()): Column =
+    tiers(rule, dt, target, path, ctx).errs
+
+  /** Both tiers of `rule` applied to `target`. */
+  def tiers(rule: Rule, dt: DataType, target: Column, path: Column, ctx: Ctx = Ctx()): Tiers =
+    compileAt(rule, dt, Target(target), path, ctx)
+
+  /** Both tiers of `rule` applied to a whole row of `schema`: the instance is
+    * the row, and each of its fields is the column of that name. */
+  def compileRow(rule: Rule, schema: StructType, ctx: Ctx = Ctx()): Tiers = {
+    val row = struct(schema.fieldNames.toIndexedSeq.map(column): _*)
+    compileAt(rule, schema, Target(row, root = true), lit(""), ctx)
+  }
+
+  /** The column named `name`, quoted so that dots and backticks are literal. */
+  private[core] def column(name: String): Column = col("`" + name.replace("`", "``") + "`")
+
+  private def compileAt(rule: Rule, dt: DataType, t: Target, path: Column, ctx: Ctx): Tiers = {
     import Rule._
+    val target = t.value
+    def at(r: Rule, rdt: DataType, v: Column, p: Column): Tiers = compileAt(r, rdt, Target(v), p, ctx)
+    def elemPath(i: Column): Column = concat(path, lit("/"), i.cast(StringType))
     rule match {
-      case Always => noErrors
+      case Always => passes
       case Never  =>
         // boolean schema `false` → the reference reports it as not/not
         // (Schema.pm:369 converts to {not=>{}}).
-        one(mkErr(path, "not", lit("not"), lit(Messages.render("not.not")), observedOf(target, dt)))
+        new Tiers(lit(false),
+          one(mkErr(path, "not", lit("not"), lit(Messages.render("not.not")), observedOf(target, dt))))
 
-      case All(rules) => compileAll(rules, dt, target, path, ctx)
+      case All(rules) => compileAll(rules, dt, t, path, ctx)
 
-      case TypeIs(types) => compileType(types, dt, target, path)
+      case TypeIs(types) => compileType(types, dt, t, path)
 
       case Enum(values) =>
         val lits = values.flatMap(litOf(_, dt))
         val okC  = lits.map(target === _).reduceOption(_ || _).getOrElse(lit(false))
         val listed = values.map(_.plain).mkString(", ")
         check(okC, mkErr(path, "enum", lit("enum"),
-          lit(Messages.render("enum.enum", listed)), observedOf(target, dt)), target)
+          lit(Messages.render("enum.enum", listed)), observedOf(target, dt)), t)
 
       case Const(value) =>
-        val okC = litOf(value, dt).map(l => target <=> l).getOrElse(lit(value == JNull) && target.isNull)
+        val okC = litOf(value, dt).map(l => target <=> l).getOrElse(lit(value == JNull) && t.isNull)
         val e = mkErr(path, "const", lit("const"),
           lit(Messages.render("const.const", value.render)), observedOf(target, dt))
-        if (value == JNull) when(okC, noErrors).otherwise(one(e)) else check(okC, e, target)
+        if (value == JNull) unless(okC, one(e)) else check(okC, e, t)
 
       case Minimum(v, excl) if isNumeric(dt) =>
         val cat = jsonTypeOf(dt)
         val (kw, ok) = if (excl) ("ex_minimum", target > lit(v).cast(dt)) else ("minimum", target >= lit(v).cast(dt))
         val tmpl = if (excl) " <= minimum(" else " < minimum("
         check(ok, mkErr(path, kw, lit(cat),
-          concat(observedOf(target, dt), lit(tmpl + num(v) + ")")), observedOf(target, dt)), target)
+          concat(observedOf(target, dt), lit(tmpl + num(v) + ")")), observedOf(target, dt)), t)
       case Maximum(v, excl) if isNumeric(dt) =>
         val cat = jsonTypeOf(dt)
         val (kw, ok) = if (excl) ("ex_maximum", target < lit(v).cast(dt)) else ("maximum", target <= lit(v).cast(dt))
         val tmpl = if (excl) " >= maximum(" else " > maximum("
         check(ok, mkErr(path, kw, lit(cat),
-          concat(observedOf(target, dt), lit(tmpl + num(v) + ")")), observedOf(target, dt)), target)
+          concat(observedOf(target, dt), lit(tmpl + num(v) + ")")), observedOf(target, dt)), t)
 
       case MultipleOf(v) if isNumeric(dt) =>
         val ok =
@@ -154,40 +227,40 @@ object RuleCompiler {
             abs(div - round(div, 0)) < lit(1e-9) * greatest(abs(div), lit(1.0))
           }
         check(ok, mkErr(path, "multipleOf", lit(jsonTypeOf(dt)),
-          lit(Messages.render("number.multipleOf", num(v))), observedOf(target, dt)), target)
+          lit(Messages.render("number.multipleOf", num(v))), observedOf(target, dt)), t)
 
       case MinLength(n) if isStringy(dt) =>
         check(length(target) >= n, mkErr(path, "minLength", lit("string"),
           concat(lit("String is too short: "), length(target).cast(StringType), lit(s"/$n.")),
-          target), target)
+          target), t)
       case MaxLength(n) if isStringy(dt) =>
         check(length(target) <= n, mkErr(path, "maxLength", lit("string"),
           concat(lit("String is too long: "), length(target).cast(StringType), lit(s"/$n.")),
-          target), target)
+          target), t)
 
       case Pattern(regex) if isStringy(dt) =>
         check(target.rlike(regex), mkErr(path, "pattern", lit("string"),
-          lit(Messages.render("string.pattern", regex)), target), target)
+          lit(Messages.render("string.pattern", regex)), target), t)
 
       case Format(name) if isStringy(dt) =>
         val okC = ctx.formats.check(name, target)
         check(okC, mkErr(path, "format", lit("format"),
-          lit(s"Does not match $name format."), target), target)
+          lit(s"Does not match $name format."), target), t)
 
       case MinItems(n) => arrayRule(dt, target) { (et, arr) =>
         check(size(arr) >= n, mkErr(path, "minItems", lit("array"),
           concat(lit("Not enough items: "), size(arr).cast(StringType), lit(s"/$n.")),
-          observedOf(arr, dt)), arr)
+          observedOf(arr, dt)), t)
       }
       case MaxItems(n) => arrayRule(dt, target) { (et, arr) =>
         check(size(arr) <= n, mkErr(path, "maxItems", lit("array"),
           concat(lit("Too many items: "), size(arr).cast(StringType), lit(s"/$n.")),
-          observedOf(arr, dt)), arr)
+          observedOf(arr, dt)), t)
       }
       case UniqueItems => arrayRule(dt, target) { (et, arr) =>
         check(size(array_distinct(arr)) === size(arr),
           mkErr(path, "uniqueItems", lit("array"),
-            lit(Messages.render("array.uniqueItems")), observedOf(arr, dt)), arr)
+            lit(Messages.render("array.uniqueItems")), observedOf(arr, dt)), t)
       }
 
       case Items(sub) => arrayRule(dt, target) { (et, arr) =>
@@ -206,13 +279,11 @@ object RuleCompiler {
           case All(parts) if !parts.exists(_.isInstanceOf[TypeIs]) &&
               !(parts.exists(p => p.isInstanceOf[Const] || p.isInstanceOf[Enum]) &&
                 parts.exists(p => !p.isInstanceOf[Const] && !p.isInstanceOf[Enum])) =>
-            parts.map(p => compile(Items(p), dt, target, path, ctx))
-              .reduceOption(concat(_, _)).getOrElse(noErrors)
+            conj(parts.map(p => compileAt(Items(p), dt, t, path, ctx)))
           case leaf if emitsSingleError(leaf) =>
             // passing element → NULL (no allocation); failing → its struct
-            val perElem = transform(arr, (x, i) =>
-              try_element_at(compile(leaf, et, x, concat(path, lit("/"), i.cast(StringType)), ctx), lit(1)))
-            val exact = filter(perElem, e => e.isNotNull)
+            def exact = filter(transform(arr, (x, i) =>
+              try_element_at(at(leaf, et, x, elemPath(i)).errs, lit(1))), e => e.isNotNull)
             // aggregate pre-check for numeric bounds: errors can exist only
             // if the array's min/max crosses the bound, so the per-element
             // transform+filter machinery (higher-order functions — no
@@ -222,46 +293,54 @@ object RuleCompiler {
             // null-skips (null elements pass bound keywords, and
             // array_min/array_max skip nulls the same way); a NULL guard
             // (empty / all-null array) falls through to the exact path,
-            // which emits nothing for those.
-            val body = itemsBoundGuard(leaf, et, arr) match {
-              case Some(allPass) => when(allPass, noErrors).otherwise(exact)
-              case None          => exact
+            // which emits nothing for those. So the guard is also the exact
+            // pass tier, with NULL read as a pass.
+            itemsBoundGuard(leaf, et, arr) match {
+              case Some(allPass) =>
+                new Tiers(arr.isNull || coalesce(allPass, lit(true)),
+                  when(arr.isNull, noErrors).otherwise(when(allPass, noErrors).otherwise(exact)))
+              case None =>
+                new Tiers(arr.isNull || forall(arr, x => at(leaf, et, x, path).pass),
+                  when(arr.isNull, noErrors).otherwise(exact))
             }
-            when(arr.isNull, noErrors).otherwise(body)
           case _ =>
-            when(arr.isNull, noErrors).otherwise(
-              flatten(transform(arr, (x, i) =>
-                compile(sub, et, x, concat(path, lit("/"), i.cast(StringType)), ctx))))
+            new Tiers(arr.isNull || forall(arr, x => at(sub, et, x, path).pass),
+              when(arr.isNull, noErrors).otherwise(
+                flatten(transform(arr, (x, i) => at(sub, et, x, elemPath(i)).errs))))
         }
       }
 
       case TupleItems(rules, additional) => arrayRule(dt, target) { (et, arr) =>
         val positional = rules.zipWithIndex.map { case (r, i) =>
-          when(arr.isNull || size(arr) <= i, noErrors).otherwise(
-            compile(r, et, element_at(arr, i + 1), concat(path, lit(s"/$i")), ctx))
+          // the guard keeps `element_at` from reading past the end (ANSI)
+          val absent = arr.isNull || size(arr) <= i
+          val sub = at(r, et, element_at(arr, i + 1), concat(path, lit(s"/$i")))
+          new Tiers(when(absent, lit(true)).otherwise(sub.pass),
+            when(absent, noErrors).otherwise(sub.errs))
         }
         val n = rules.length
         val extra = additional match {
           case None =>
             // additionalItems:false caps length (Schema.pm:645-661)
-            when(arr.isNull || size(arr) <= n, noErrors).otherwise(
+            unless(arr.isNull || size(arr) <= n,
               one(mkErr(path, "additionalItems", lit("array"),
                 concat(lit("Invalid number of items: "), size(arr).cast(StringType), lit(s"/$n.")),
                 observedOf(arr, dt))))
           case Some(r) =>
-            when(arr.isNull, noErrors).otherwise(
-              flatten(transform(arr, (x, i) =>
-                when(i < n, noErrors).otherwise(
-                  compile(r, et, x, concat(path, lit("/"), i.cast(StringType)), ctx)))))
+            new Tiers(
+              arr.isNull || forall(transform(arr, (x, i) => i < n || at(r, et, x, path).pass), b => b),
+              when(arr.isNull, noErrors).otherwise(
+                flatten(transform(arr, (x, i) =>
+                  when(i < n, noErrors).otherwise(at(r, et, x, elemPath(i)).errs)))))
         }
-        concat((positional :+ extra): _*)
+        conj(positional :+ extra)
       }
 
       case Contains(sub, minC, maxC) => arrayRule(dt, target) { (et, arr) =>
-        val matches = size(filter(arr, x => size(compile(sub, et, x, path, ctx)) === 0))
+        val matches = size(filter(arr, x => at(sub, et, x, path).pass))
         val lo = minC.getOrElse(1)
-        val containsErr =
-          when(arr.isNull || matches >= lo, noErrors).otherwise(
+        val containsT =
+          unless(arr.isNull || matches >= lo,
             if (minC.isDefined)
               one(mkErr(path, "minContains", lit("array"),
                 concat(lit("Contains not enough items: "), matches.cast(StringType), lit(s"/$lo.")),
@@ -269,15 +348,13 @@ object RuleCompiler {
             else
               one(mkErr(path, "contains", lit("array"),
                 lit(Messages.render("array.contains")), observedOf(arr, dt))))
-        val maxErr = maxC match {
-          case Some(hi) =>
-            when(arr.isNull || matches <= hi, noErrors).otherwise(
-              one(mkErr(path, "maxContains", lit("array"),
-                concat(lit("Contains too many items: "), matches.cast(StringType), lit(s"/$hi.")),
-                observedOf(arr, dt))))
-          case None => noErrors
+        val maxT = maxC.map { hi =>
+          unless(arr.isNull || matches <= hi,
+            one(mkErr(path, "maxContains", lit("array"),
+              concat(lit("Contains too many items: "), matches.cast(StringType), lit(s"/$hi.")),
+              observedOf(arr, dt))))
         }
-        concat(containsErr, maxErr)
+        conj(containsT +: maxT.toSeq)
       }
 
       case Properties(props) => dt match {
@@ -285,99 +362,76 @@ object RuleCompiler {
         // is skipped on null (the reference skips rules for missing keys,
         // Draft4.pm:191-195) and `required` owns the null check.
         case st: StructType =>
-          val subErrs = props.flatMap { case (name, sub) =>
+          t.skipNull(props.flatMap { case (name, sub) =>
             st.fields.find(_.name == name).map { f =>
-              val fieldCol = target.getField(name)
-              when(fieldCol.isNull, noErrors).otherwise(
-                compile(sub, f.dataType, fieldCol, concat(path, lit(s"/$name")), ctx))
+              val fieldCol = t.field(name)
+              skipNull(fieldCol, at(sub, f.dataType, fieldCol, concat(path, lit(s"/$name"))))
             } // missing column: `required` reports it; properties on absent key pass
-          }
-          if (subErrs.isEmpty) noErrors
-          else when(target.isNull, noErrors).otherwise(concat(subErrs: _*))
+          })
         // dynamic objects (from_json to map<string,…>): keys are runtime
         // values — the reference's native hash regime (Draft4.pm:191-195)
         case MapType(_: StringType, vt, _) =>
-          val subErrs = props.map { case (name, sub) =>
+          t.skipNull(props.map { case (name, sub) =>
             val v = try_element_at(target, lit(name))
-            when(v.isNull, noErrors).otherwise(
-              compile(sub, vt, v, concat(path, lit(s"/$name")), ctx))
-          }
-          if (subErrs.isEmpty) noErrors
-          else when(target.isNull, noErrors).otherwise(concat(subErrs: _*))
-        case _ => noErrors
+            skipNull(v, at(sub, vt, v, concat(path, lit(s"/$name"))))
+          })
+        case _ => passes
       }
 
       case PatternProperties(props) => dt match {
         case st: StructType =>
-          val subErrs = for {
+          t.skipNull(for {
             (regex, sub) <- props
-            f <- st.fields if java.util.regex.Pattern.compile(regex).matcher(f.name).find()
+            f <- st.fields.toSeq if java.util.regex.Pattern.compile(regex).matcher(f.name).find()
           } yield {
-            val fieldCol = target.getField(f.name)
-            when(fieldCol.isNull, noErrors).otherwise(
-              compile(sub, f.dataType, fieldCol, concat(path, lit(s"/${f.name}")), ctx))
-          }
-          if (subErrs.isEmpty) noErrors
-          else when(target.isNull, noErrors).otherwise(concat(subErrs: _*))
+            val fieldCol = t.field(f.name)
+            skipNull(fieldCol, at(sub, f.dataType, fieldCol, concat(path, lit(s"/${f.name}"))))
+          })
         case MapType(_: StringType, vt, _) =>
           // runtime key match: every key matching the regex applies the rule
           // to its value (rlike = partial match, like the reference)
-          val subErrs = props.map { case (regex, sub) =>
-            flatten(transform(
-              filter(map_keys(target), k => k.rlike(regex)),
-              k => compile(sub, vt, try_element_at(target, k), concat(path, lit("/"), k), ctx)))
-          }
-          if (subErrs.isEmpty) noErrors
-          else when(target.isNull, noErrors).otherwise(concat(subErrs: _*))
-        case _ => noErrors
+          t.skipNull(props.map { case (regex, sub) =>
+            val keys = filter(map_keys(target), k => k.rlike(regex))
+            new Tiers(forall(keys, k => at(sub, vt, try_element_at(target, k), path).pass),
+              flatten(transform(keys,
+                k => at(sub, vt, try_element_at(target, k), concat(path, lit("/"), k)).errs)))
+          })
+        case _ => passes
       }
 
-      case Required(fields) => dt match {
-        case st: StructType =>
-          val errs = fields.map { name =>
-            st.fields.find(_.name == name) match {
-              case Some(_) =>
-                // relational mapping: NULL = absent (documented divergence from
-                // pure key-presence semantics; see SURVEY.md §2.2 `required`)
-                when(target.isNull || target.getField(name).isNotNull, noErrors)
-                  .otherwise(one(mkErr(concat(path, lit(s"/$name")), "required", lit("object"),
-                    lit(Messages.render("object.required")), lit("null"))))
-              case None =>
-                when(target.isNull, noErrors).otherwise(
-                  one(mkErr(concat(path, lit(s"/$name")), "required", lit("object"),
-                    lit(Messages.render("object.required")), lit("null"))))
-            }
-          }
-          concat(errs: _*)
-        case MapType(_: StringType, _, _) =>
-          val errs = fields.map { name =>
-            when(target.isNull || try_element_at(target, lit(name)).isNotNull, noErrors)
-              .otherwise(one(mkErr(concat(path, lit(s"/$name")), "required", lit("object"),
-                lit(Messages.render("object.required")), lit("null"))))
-          }
-          concat(errs: _*)
-        case _ => noErrors
-      }
+      case Required(fields) =>
+        def missing(name: String) = one(mkErr(concat(path, lit(s"/$name")), "required", lit("object"),
+          lit(Messages.render("object.required")), lit("null")))
+        dt match {
+          case st: StructType =>
+            // relational mapping: NULL = absent (documented divergence from
+            // pure key-presence semantics; see SURVEY.md §2.2 `required`)
+            t.skipNull(fields.map { name =>
+              val present = if (st.fieldNames.contains(name)) t.field(name).isNotNull else lit(false)
+              unless(present, missing(name))
+            })
+          case MapType(_: StringType, _, _) =>
+            t.skipNull(fields.map(name => unless(try_element_at(target, lit(name)).isNotNull, missing(name))))
+          case _ => passes
+        }
 
       case ClosedWorld(allowed, patterns, sub) => dt match {
         case st: StructType =>
           val compiled = patterns.map(java.util.regex.Pattern.compile)
-          val extras = st.fields.filterNot(f =>
+          val extras = st.fields.toSeq.filterNot(f =>
             allowed.contains(f.name) || compiled.exists(_.matcher(f.name).find()))
           sub match {
             case None if extras.nonEmpty =>
               // static closed-world failure: every (non-null) row errs
               // (Schema.pm:762-770 lists the extras sorted)
               val names = extras.map(_.name).sorted.mkString(", ")
-              when(target.isNull, noErrors).otherwise(
+              unless(t.isNull,
                 one(mkErr(path, "additionalProperties", lit("object"),
                   lit(Messages.render("object.additionalProperties", names)), observedOf(target, dt))))
-            case None => noErrors
+            case None => passes
             case Some(r) =>
-              val errs = extras.map(f =>
-                compile(r, f.dataType, target.getField(f.name), concat(path, lit(s"/${f.name}")), ctx))
-              if (errs.isEmpty) noErrors
-              else when(target.isNull, noErrors).otherwise(concat(errs.toSeq: _*))
+              t.skipNull(extras.map(f =>
+                at(r, f.dataType, t.field(f.name), concat(path, lit(s"/${f.name}")))))
           }
         case MapType(_: StringType, vt, _) =>
           // dynamic keys: the extras set is computed per row
@@ -387,28 +441,28 @@ object RuleCompiler {
           val extras = filter(map_keys(target), isExtra)
           sub match {
             case None =>
-              when(target.isNull || size(extras) === 0, noErrors).otherwise(
+              unless(target.isNull || size(extras) === 0,
                 one(mkErr(path, "additionalProperties", lit("object"),
                   concat(lit("Properties not allowed: "),
                     array_join(array_sort(extras), ", "), lit(".")),
                   observedOf(target, dt))))
             case Some(r) =>
-              when(target.isNull, noErrors).otherwise(
+              t.skipNull(Seq(new Tiers(forall(extras, k => at(r, vt, try_element_at(target, k), path).pass),
                 flatten(transform(extras,
-                  k => compile(r, vt, try_element_at(target, k), concat(path, lit("/"), k), ctx))))
+                  k => at(r, vt, try_element_at(target, k), concat(path, lit("/"), k)).errs)))))
           }
-        case _ => noErrors
+        case _ => passes
       }
 
-      case MinProperties(n) => objectCount(dt, target) { cnt =>
+      case MinProperties(n) => objectCount(dt, t) { cnt =>
         check(cnt >= n, mkErr(path, "minProperties", lit("object"),
           concat(lit("Not enough properties: "), cnt.cast(StringType), lit(s"/$n.")),
-          observedOf(target, dt)), target)
+          observedOf(target, dt)), t)
       }
-      case MaxProperties(n) => objectCount(dt, target) { cnt =>
+      case MaxProperties(n) => objectCount(dt, t) { cnt =>
         check(cnt <= n, mkErr(path, "maxProperties", lit("object"),
           concat(lit("Too many properties: "), cnt.cast(StringType), lit(s"/$n.")),
-          observedOf(target, dt)), target)
+          observedOf(target, dt)), t)
       }
 
       case PropertyNames(sub) => dt match {
@@ -418,99 +472,97 @@ object RuleCompiler {
           val bad = st.fieldNames.filterNot { name =>
             evalStaticString(sub, name, ctx)
           }
-          if (bad.isEmpty) noErrors
-          else when(target.isNull, noErrors).otherwise(
+          if (bad.isEmpty) passes
+          else unless(t.isNull,
             concat(bad.toSeq.map(name => one(mkErr(concat(path, lit(s"/$name")), "propertyNames",
               lit("object"), lit("Does not match propertyNames."), lit(name)))): _*))
         case MapType(_: StringType, _, _) =>
-          when(target.isNull, noErrors).otherwise(
+          t.skipNull(Seq(new Tiers(forall(map_keys(target), k => at(sub, StringType, k, path).pass),
             filter(transform(map_keys(target), k =>
-              try_element_at(compile(sub, StringType, k, path, ctx), lit(1))),
-              e => e.isNotNull))
-        case _ => noErrors
+              try_element_at(at(sub, StringType, k, path).errs, lit(1))),
+              e => e.isNotNull))))
+        case _ => passes
       }
 
-      case DependentRequired(deps) => dt match {
+      case DependentRequired(deps) =>
+        def err(dependee: String, dep: String) =
+          one(mkErr(concat(path, lit(s"/$dep")), "dependencies", lit("object"),
+            lit(Messages.render("object.dependencies", dependee)), lit("null")))
+        dt match {
+          case st: StructType =>
+            t.skipNull(for {
+              (dependee, dependents) <- deps if st.fieldNames.contains(dependee)
+              dep <- dependents
+            } yield {
+              val depOk = if (st.fieldNames.contains(dep)) t.field(dep).isNotNull else lit(false)
+              unless(t.field(dependee).isNull || depOk, err(dependee, dep))
+            })
+          case MapType(_: StringType, _, _) =>
+            t.skipNull(for ((dependee, dependents) <- deps; dep <- dependents) yield
+              unless(try_element_at(target, lit(dependee)).isNull ||
+                try_element_at(target, lit(dep)).isNotNull, err(dependee, dep)))
+          case _ => passes
+        }
+
+      case DependentSchemas(deps) => dt match {
         case st: StructType =>
-          val errs = for {
-            (dependee, dependents) <- deps if st.fieldNames.contains(dependee)
-            dep <- dependents
-          } yield {
-            val present = st.fieldNames.contains(dep)
-            val depCol = if (present) target.getField(dep).isNotNull else lit(false)
-            when(target.isNull || target.getField(dependee).isNull || depCol, noErrors)
-              .otherwise(one(mkErr(concat(path, lit(s"/$dep")), "dependencies", lit("object"),
-                lit(Messages.render("object.dependencies", dependee)), lit("null"))))
-          }
-          if (errs.isEmpty) noErrors else concat(errs: _*)
-        case MapType(_: StringType, _, _) =>
-          val errs = for ((dependee, dependents) <- deps; dep <- dependents) yield
-            when(target.isNull || try_element_at(target, lit(dependee)).isNull ||
-                try_element_at(target, lit(dep)).isNotNull, noErrors)
-              .otherwise(one(mkErr(concat(path, lit(s"/$dep")), "dependencies", lit("object"),
-                lit(Messages.render("object.dependencies", dependee)), lit("null"))))
-          if (errs.isEmpty) noErrors else concat(errs: _*)
-        case _ => noErrors
-      }
-
-      case DependentSchemas(deps) => structRule(dt, target) { st =>
-        val errs = for ((dependee, sub) <- deps if st.fieldNames.contains(dependee)) yield
-          when(target.isNull || target.getField(dependee).isNull, noErrors)
-            .otherwise(compile(sub, dt, target, path, ctx))
-        if (errs.isEmpty) noErrors else concat(errs: _*)
+          t.skipNull(for ((dependee, sub) <- deps if st.fieldNames.contains(dependee)) yield
+            skipNull(t.field(dependee), compileAt(sub, dt, t, path, ctx)))
+        case _ => passes
       }
 
       case Not(sub) =>
-        val subErrs = compile(sub, dt, target, path, ctx)
-        when(size(subErrs) > 0, noErrors).otherwise(
+        val s = compileAt(sub, dt, t, path, ctx)
+        new Tiers(!s.pass, when(s.pass,
           one(mkErr(path, "not", lit("not"), lit(Messages.render("not.not")), observedOf(target, dt))))
+          .otherwise(noErrors))
 
-      case AllOf(rules) => combinator("allOf", rules, dt, target, path, ctx, requireAll = true)
-      case AnyOf(rules) => combinator("anyOf", rules, dt, target, path, ctx, requireAll = false)
-      case OneOf(rules) => compileOneOf(rules, dt, target, path, ctx)
+      case AllOf(rules) => combinator("allOf", rules, dt, t, path, ctx, requireAll = true)
+      case AnyOf(rules) => combinator("anyOf", rules, dt, t, path, ctx, requireAll = false)
+      case OneOf(rules) => compileOneOf(rules, dt, t, path, ctx)
 
       case IfThenElse(condR, thenR, elseR) =>
-        val condErrs = compile(condR, dt, target, path, ctx)
-        val thenErrs = thenR.map(compile(_, dt, target, path, ctx)).getOrElse(noErrors)
-        val elseErrs = elseR.map(compile(_, dt, target, path, ctx)).getOrElse(noErrors)
-        when(size(condErrs) === 0, thenErrs).otherwise(elseErrs)
+        val cond = compileAt(condR, dt, t, path, ctx)
+        val thenT = thenR.map(compileAt(_, dt, t, path, ctx)).getOrElse(passes)
+        val elseT = elseR.map(compileAt(_, dt, t, path, ctx)).getOrElse(passes)
+        new Tiers(when(cond.pass, thenT.pass).otherwise(elseT.pass),
+          when(cond.pass, thenT.errs).otherwise(elseT.errs))
 
-      case Nullable(sub) =>
-        when(target.isNull, noErrors).otherwise(compile(sub, dt, target, path, ctx))
+      case Nullable(sub) => t.skipNull(Seq(compileAt(sub, dt, t, path, ctx)))
 
-      case Discriminator(field, mapping, default) => structRule(dt, target) { st =>
-        if (!st.fieldNames.contains(field)) noErrors
-        else {
-          val disc = target.getField(field)
-          val fallback = default.map(compile(_, dt, target, path, ctx)).getOrElse(noErrors)
+      case Discriminator(field, mapping, default) => dt match {
+        case st: StructType if st.fieldNames.contains(field) =>
+          val disc = t.field(field)
+          val fallback = default.map(compileAt(_, dt, t, path, ctx)).getOrElse(passes)
           mapping.foldRight(fallback) { case ((value, sub), acc) =>
-            when(disc === lit(value), compile(sub, dt, target, path, ctx)).otherwise(acc)
+            val s = compileAt(sub, dt, t, path, ctx)
+            val hit = disc === lit(value)
+            new Tiers(when(hit, s.pass).otherwise(acc.pass), when(hit, s.errs).otherwise(acc.errs))
           }
-        }
+        case _ => passes
       }
 
       case Modal(sub, appliesTo) =>
         // readOnly fields don't constrain requests; writeOnly don't
         // constrain responses (OpenAPIv3.pm:356-396)
         if (appliesTo == Rule.Both || ctx.direction == Rule.Both || appliesTo == ctx.direction)
-          compile(sub, dt, target, path, ctx)
-        else noErrors
+          compileAt(sub, dt, t, path, ctx)
+        else passes
 
       case PresenceForbidden(dir, msg) =>
         // "Read-only."/"Write-only." on presence in the disallowed direction
         // (OpenAPIv3.pm:363, 384); Both = plain schema validation → inert
         if (ctx.direction == dir)
-          when(target.isNull, noErrors).otherwise(
-            one(mkErr(path, "modality", lit("modality"), lit(msg), observedOf(target, dt))))
-        else noErrors
+          unless(t.isNull, one(mkErr(path, "modality", lit("modality"), lit(msg), observedOf(target, dt))))
+        else passes
 
       case Predicate(ruleId, message, pred) =>
         check(pred(target), mkErr(path, ruleId, lit("custom"), lit(message),
-          observedOf(target, dt)), target)
+          observedOf(target, dt)), t)
 
       // keyword not applicable to this column type → passes (JSON-Schema
       // semantics: keywords constrain only their own type)
-      case _ => noErrors
+      case _ => passes
     }
   }
 
@@ -541,22 +593,18 @@ object RuleCompiler {
     case _ => None
   }
 
-  private def arrayRule(dt: DataType, target: Column)(f: (DataType, Column) => Column): Column = dt match {
+  private def arrayRule(dt: DataType, target: Column)(f: (DataType, Column) => Tiers): Tiers = dt match {
     case ArrayType(et, _) => f(et, target)
-    case _                => noErrors
+    case _                => passes
   }
 
-  private def structRule(dt: DataType, target: Column)(f: StructType => Column): Column = dt match {
-    case st: StructType => f(st)
-    case _              => noErrors
-  }
-
-  /** Key count of an object column: non-null fields for a (static) struct,
+  /** Key count of an object: non-null fields for a (static) struct,
     * `size(map_keys(m))` for a dynamic map. */
-  private def objectCount(dt: DataType, target: Column)(f: Column => Column): Column = dt match {
-    case st: StructType => f(presentCount(st, target))
-    case _: MapType     => f(size(map_keys(target)))
-    case _              => noErrors
+  private def objectCount(dt: DataType, t: Target)(f: Column => Tiers): Tiers = dt match {
+    case st: StructType => f(st.fields.map(fld => t.field(fld.name).isNotNull.cast(IntegerType): Column)
+      .reduceOption(_ + _).getOrElse(lit(0)))
+    case _: MapType     => f(size(map_keys(t.value)))
+    case _              => passes
   }
 
   /** Driver-side evaluation of a string rule against a constant (struct
@@ -582,107 +630,93 @@ object RuleCompiler {
     }
   }
 
-  private def presentCount(st: StructType, target: Column): Column =
-    st.fields.map(f => target.getField(f.name).isNotNull.cast(IntegerType): Column)
-      .reduceOption(_ + _).getOrElse(lit(0))
-
   /** `type` keyword. Static DataType decides conformance; only null-ness and
     * integer-on-fractional remain runtime (reference Util.pm:58-72 +
     * Schema.pm:684-692 integer check). Union types use the reference's
     * combined message `Expected a/b - got c.` (Schema.pm:450-470). */
-  private def compileType(types: Seq[String], dt: DataType, target: Column, path: Column): Column = {
+  private def compileType(types: Seq[String], dt: DataType, t: Target, path: Column): Tiers = {
+    val target = t.value
     val staticT = jsonTypeOf(dt)
     val allowsNull = types.contains("null")
     val want = types.mkString("/")
+    val direct = types.contains(staticT) || (staticT == "integer" && types.contains("number"))
 
     // the reference's data_type reports "integer" only when a candidate
     // schema asks for it; otherwise integral values are "number"
     // (Util.pm:66-69 — pinned by t/issue-22: "Expected string - got number.")
     val gotName = if (staticT == "integer" && !types.contains("integer")) "number" else staticT
-    def gotCol: Column = when(target.isNull, lit("null")).otherwise(lit(gotName))
+    def gotCol: Column = when(t.isNull, lit("null")).otherwise(lit(gotName))
 
-    val matchesNonNull: Column = {
-      val direct = types.contains(staticT) ||
-        (staticT == "integer" && types.contains("number"))
+    val matchesNonNull: Column =
       if (direct) lit(true)
       else if (staticT == "number" && types.contains("integer"))
         target === floor(target) // fractional column holding a whole value
       else lit(false)
-    }
 
-    val ok = when(target.isNull, lit(allowsNull)).otherwise(matchesNonNull)
+    val ok = if (t.root) matchesNonNull else when(target.isNull, lit(allowsNull)).otherwise(matchesNonNull)
     val category = if (types == Seq("null")) "null" else want
-    val message =
+    def message =
       if (types == Seq("null")) lit(Messages.render("null.type"))
       else concat(lit(s"Expected $want - got "), gotCol, lit("."))
-    when(ok, noErrors).otherwise(one(mkErr(path, "type", lit(category), message,
-      when(target.isNull, lit("null")).otherwise(observedOf(target, dt)))))
+    // conformance decided at compile time: nothing to evaluate per row
+    if (direct && (allowsNull || t.root)) passes
+    else unless(ok, one(mkErr(path, "type", lit(category), message,
+      when(t.isNull, lit("null")).otherwise(observedOf(target, dt)))))
   }
 
   /** Conjunction of keywords from one schema object: type errors suppress the
     * value-keyword errors (reference Schema.pm:410 `return @errors if
     * @errors` after type dispatch). */
-  private def compileAll(rules: Seq[Rule], dt: DataType, target: Column, path: Column, ctx: Ctx): Column = {
+  private def compileAll(rules: Seq[Rule], dt: DataType, t: Target, path: Column, ctx: Ctx): Tiers = {
     import Rule._
     val (typeRules, rest0)   = rules.partition(_.isInstanceOf[TypeIs])
     val (constEnum, rest)    = rest0.partition(r => r.isInstanceOf[Const] || r.isInstanceOf[Enum])
-    def cat(rs: Seq[Rule]): Column =
-      rs.map(compile(_, dt, target, path, ctx)).reduceOption(concat(_, _)).getOrElse(noErrors)
-    // dispatcher order: combinator+type errors first; if none, value
-    // keywords; const/enum only after everything else passed
-    // (Schema.pm:401-419). The gates are built ONLY for non-empty groups —
-    // a `when(size(e)>0, e).otherwise(…)` inlines `e` twice, which blows up
-    // the expression tree (and runtime) for the common min/max-only packs.
-    (typeRules.nonEmpty, rest.nonEmpty, constEnum.nonEmpty) match {
-      case (false, _, false)    => cat(rest)
-      case (true, false, false) => cat(typeRules)
-      case (true, true, false)  =>
-        val typeErrs = cat(typeRules)
-        when(size(typeErrs) > 0, typeErrs).otherwise(cat(rest))
-      case (false, false, true) => cat(constEnum)
-      case (false, true, true)  =>
-        val otherErrs = cat(rest)
-        when(size(otherErrs) > 0, otherErrs).otherwise(cat(constEnum))
-      case (true, _, true) =>
-        val typeErrs = cat(typeRules)
-        val otherErrs = cat(rest)
-        when(size(typeErrs) > 0, typeErrs)
-          .otherwise(when(size(otherErrs) > 0, otherErrs).otherwise(cat(constEnum)))
-    }
+    // dispatcher order: type errors first; if none, value keywords;
+    // const/enum only after everything else passed (Schema.pm:401-419).
+    // Each gate reads the earlier group's pass tier, so no group's errors
+    // are inlined twice.
+    Seq(typeRules, rest, constEnum).filter(_.nonEmpty)
+      .map(rs => conj(rs.map(compileAt(_, dt, t, path, ctx))))
+      .reduceRightOption { (first, later) =>
+        new Tiers(first.pass && later.pass, when(first.pass, later.errs).otherwise(first.errs))
+      }
+      .getOrElse(passes)
   }
 
   /** Shared allOf/anyOf machinery incl. message prefixing and the same-path
     * type-error collapse (Schema.pm:422-496, Util.pm:116-130). */
-  private def combinator(kind: String, rules: Seq[Rule], dt: DataType, target: Column,
-      path: Column, ctx: Ctx, requireAll: Boolean): Column = {
-    val branches = rules.zipWithIndex.map { case (r, i) =>
-      prefixErrors(kind, i, compile(r, dt, target, path, ctx))
-    }
-    val allErrs = branches.reduceOption(concat(_, _)).getOrElse(noErrors)
-    val anyPass = branches.map(b => size(b) === 0).reduceOption(_ || _).getOrElse(lit(true))
-    val raw = if (requireAll) allErrs else when(anyPass, noErrors).otherwise(allErrs)
-    collapseTypeErrors(kind, raw, path, target, dt)
+  private def combinator(kind: String, rules: Seq[Rule], dt: DataType, t: Target,
+      path: Column, ctx: Ctx, requireAll: Boolean): Tiers = {
+    val branches = rules.map(compileAt(_, dt, t, path, ctx))
+    def failed = collapseTypeErrors(kind,
+      concat(branches.zipWithIndex.map { case (b, i) => prefixErrors(kind, i, b.errs) }: _*),
+      path, t, dt)
+    if (branches.isEmpty) passes
+    else if (requireAll) new Tiers(branches.map(_.pass).reduce(_ && _), failed)
+    else unless(branches.map(_.pass).reduce(_ || _), failed)
   }
 
-  private def compileOneOf(rules: Seq[Rule], dt: DataType, target: Column, path: Column, ctx: Ctx): Column = {
-    val branchErrs = rules.zipWithIndex.map { case (r, i) => (i, compile(r, dt, target, path, ctx)) }
-    val passBits   = branchErrs.map { case (_, b) => (size(b) === 0).cast(IntegerType) }
-    val passCount  = passBits.reduceOption(_ + _).getOrElse(lit(0))
-    val passedIdx  = array_join(
-      filter(array(branchErrs.map { case (i, b) => when(size(b) === 0, lit(i.toString)) }: _*),
-        x => x.isNotNull), ", ")
-    val prefixed = branchErrs.map { case (i, b) => prefixErrors("oneOf", i, b) }
-      .reduceOption(concat(_, _)).getOrElse(noErrors)
-    val failAll = collapseTypeErrors("oneOf", prefixed, path, target, dt)
-    when(passCount === 1, noErrors)
-      .when(passCount === rules.length && passCount > 0,
-        one(mkErr(path, "all_rules_match", lit("oneOf"),
-          lit(Messages.render("oneOf.all_rules_match")), observedOf(target, dt))))
-      .when(passCount > 1,
-        one(mkErr(path, "n_rules_match", lit("oneOf"),
-          concat(lit("oneOf rules "), passedIdx, lit(" match.")), observedOf(target, dt))))
-      .otherwise(failAll)
-  }
+  private def compileOneOf(rules: Seq[Rule], dt: DataType, t: Target, path: Column, ctx: Ctx): Tiers =
+    if (rules.isEmpty) passes
+    else {
+      val target = t.value
+      val branches  = rules.map(compileAt(_, dt, t, path, ctx)).zipWithIndex
+      val passCount = branches.map { case (b, _) => b.pass.cast(IntegerType) }.reduce(_ + _)
+      def passedIdx = array_join(
+        filter(array(branches.map { case (b, i) => when(b.pass, lit(i.toString)) }: _*),
+          x => x.isNotNull), ", ")
+      def failAll = collapseTypeErrors("oneOf",
+        concat(branches.map { case (b, i) => prefixErrors("oneOf", i, b.errs) }: _*), path, t, dt)
+      val pass = passCount === 1
+      new Tiers(pass, when(pass, noErrors)
+        .when(passCount === rules.length,
+          one(mkErr(path, "all_rules_match", lit("oneOf"),
+            lit(Messages.render("oneOf.all_rules_match")), observedOf(target, dt))))
+        .when(passCount > 1,
+          one(mkErr(path, "n_rules_match", lit("oneOf"),
+            concat(lit("oneOf rules "), passedIdx, lit(" match.")), observedOf(target, dt))))
+        .otherwise(failAll))
+    }
 
   /** `/kind/<i> ` message prefix; a sub-message already starting with a path
     * gets joined without the space (the reference's `s!(\d+)\s/!$1/!g`
@@ -700,14 +734,14 @@ object RuleCompiler {
   /** When a combinator fails with ≥2 errors that are all `type` errors at the
     * base path, collapse them into one combined error
     * `/allOf Expected a/b - got c.` (Schema.pm:438-447). */
-  private def collapseTypeErrors(kind: String, errs: Column, path: Column, target: Column, dt: DataType): Column = {
+  private def collapseTypeErrors(kind: String, errs: Column, path: Column, t: Target, dt: DataType): Column = {
     val nonType = exists(errs, e => e.getField("rule_id") =!= "type" || e.getField("path") =!= path)
     val wantTypes = array_join(array_distinct(transform(errs, e => e.getField("category"))), "/")
-    val got = when(target.isNull, lit("null")).otherwise(lit(jsonTypeOf(dt)))
+    val got = when(t.isNull, lit("null")).otherwise(lit(jsonTypeOf(dt)))
     when(size(errs) >= 2 && !nonType,
       one(mkErr(path, "type", lit(kind),
         concat(lit(s"/$kind Expected "), wantTypes, lit(" - got "), got, lit(".")),
-        when(target.isNull, lit("null")).otherwise(observedOf(target, dt)))))
+        when(t.isNull, lit("null")).otherwise(observedOf(t.value, dt)))))
       .otherwise(errs)
   }
 }

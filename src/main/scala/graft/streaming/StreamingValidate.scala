@@ -21,8 +21,7 @@ object StreamingValidate {
     * Append-mode safe (no aggregation). */
   def violations(stream: DataFrame, rule: Rule, idCols: Seq[String],
       ctx: RuleCompiler.Ctx = RuleCompiler.Ctx()): DataFrame = {
-    val rowCol = struct(stream.columns.toIndexedSeq.map(col): _*)
-    val errs = RuleCompiler.compile(rule, stream.schema, rowCol, lit(""), ctx)
+    val errs = RuleCompiler.compileRow(rule, stream.schema, ctx).errs
     val keep = idCols.map(col)
     stream.select(keep :+ errs.as("_errs"): _*)
       .select(keep :+ explode(col("_errs")).as("_e"): _*)
@@ -85,10 +84,9 @@ object StreamingValidate {
   def windowedVerdicts(stream: DataFrame, rule: Rule, tsCol: String,
       windowDuration: String, watermark: String,
       ctx: RuleCompiler.Ctx = RuleCompiler.Ctx()): DataFrame = {
-    val rowCol = struct(stream.columns.toIndexedSeq.map(col): _*)
-    val errs = RuleCompiler.compile(rule, stream.schema, rowCol, lit(""), ctx)
+    val pass = RuleCompiler.compileRow(rule, stream.schema, ctx).pass
     stream
-      .withColumn("__failed", (size(errs) > 0).cast("long"))
+      .withColumn("__failed", (!pass).cast("long"))
       .withWatermark(tsCol, watermark)
       .groupBy(window(col(tsCol), windowDuration))
       .agg(

@@ -2,7 +2,7 @@ package graft.table
 
 import graft.core.{JArr, JInt, JObj, JStr, JValue}
 import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.functions._
 
 import java.nio.charset.StandardCharsets
@@ -115,10 +115,12 @@ class SnapshotStore(root: String, spark: SparkSession) {
     * overwrite is idempotent) and then counted and committed here, so the
     * count-back also heals a torn previous run — but ONLY for partitions
     * this run's input actually contains: the count-back is intersected with
-    * the distinct partition values of `remainingDf` (a column-pruned,
-    * metadata-scale job), so stray directories under a shared root (a torn
-    * run of a different dataframe or another snapshot id) are never claimed
-    * as "committed by this run" and never marked completed. */
+    * the partition keys the write itself saw, observed on it
+    * (`collect_set` of the key through an `Observation`, read after the
+    * write returns; no second job re-runs the input to find them), so stray
+    * directories under a shared root (a torn run of a different dataframe
+    * or another snapshot id) are never claimed as "committed by this run"
+    * and never marked completed. */
   def writeResumable(df: DataFrame, partCol: String, snapshotId: String): Map[String, Long] = {
     val prior = readManifest(snapshotId).getOrElse(SnapshotManifest(snapshotId, None, Map.empty))
     val done = prior.completed.keySet
@@ -128,18 +130,17 @@ class SnapshotStore(root: String, spark: SparkSession) {
       else df.where(!partKey(partCol).isInCollection(done))
 
     // partitions this run's input actually carries — the only ones the
-    // count-back may credit to this run (partition column only: parquet
-    // reads one column's pages, nothing else)
-    val inputParts: Set[String] = remainingDf.select(partKey(partCol).as("__p"))
-      .distinct().collect().map(_.getString(0)).toSet
-
+    // count-back may credit to this run
+    val seen = Observation()
     val prev = spark.conf.getOption("spark.sql.sources.partitionOverwriteMode")
     spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try remainingDf.write.mode("overwrite").partitionBy(partCol).parquet(dataPath)
+    try remainingDf.observe(seen, collect_set(partKey(partCol)).as("parts"))
+      .write.mode("overwrite").partitionBy(partCol).parquet(dataPath)
     finally prev match {
       case Some(v) => spark.conf.set("spark.sql.sources.partitionOverwriteMode", v)
       case None => spark.conf.unset("spark.sql.sources.partitionOverwriteMode")
     }
+    val inputParts = seen.get("parts").asInstanceOf[collection.Seq[String]].toSet
 
     // count back the newly committed partitions (metadata-only job)
     val dataDir = new Path(dataPath)
@@ -186,12 +187,23 @@ class SnapshotStore(root: String, spark: SparkSession) {
     * no-shuffle read needs the reader's
     * `spark.sql.sources.bucketing.enabled` (default true). Pick
     * `numBuckets` so each bucket lands near the 128 MB-1 GB file band at
-    * production volume. */
+    * production volume. An existing catalog table of the same name is
+    * replaced only when it lives at that same location; any other table is
+    * left alone, and the write fails naming both locations. */
   def writeBucketed(df: DataFrame, table: String, keyCols: Seq[String],
       numBuckets: Int): Unit = {
     require(keyCols.nonEmpty && numBuckets > 0)
+    val location = fs.makeQualified(new Path(s"$root/bucketed/$table"))
+    val catalog = spark.sessionState.catalog
+    val id = spark.sessionState.sqlParser.parseTableIdentifier(table)
+    if (catalog.tableExists(id)) {
+      val at = new Path(catalog.getTableMetadata(id).location)
+      val existing = at.getFileSystem(spark.sparkContext.hadoopConfiguration).makeQualified(at)
+      require(existing == location,
+        s"writeBucketed: table $table exists at $existing, not at $location; refusing to overwrite it")
+    }
     df.write.mode("overwrite").format("parquet")
-      .option("path", s"$root/bucketed/$table")
+      .option("path", location.toString)
       .bucketBy(numBuckets, keyCols.head, keyCols.drop(1): _*)
       .sortBy(keyCols.head, keyCols.drop(1): _*)
       .saveAsTable(table)

@@ -458,6 +458,73 @@ class PlanAuditSpec extends SparkSuite {
     }
   }
 
+  /** A pack with the keywords of perfbench/packs/records.json, over a
+    * parquet table of that shape. */
+  private lazy val records = {
+    import graft.core.JValue
+    import graft.rulepack.RulePack
+    val pack = RulePack.fromJson(JValue.parseAny(
+      """{"type": "object", "required": ["rec_id", "email", "created_at", "status", "address"],
+        |"properties": {
+        |  "rec_id": {"type": "string", "pattern": "^rec-[0-9]{10}$"},
+        |  "email": {"type": "string", "format": "email"},
+        |  "created_at": {"type": "string", "format": "date-time"},
+        |  "status": {"enum": ["active", "pending", "closed"]},
+        |  "score": {"type": "integer", "minimum": 0, "maximum": 1000},
+        |  "tags": {"type": "array", "maxItems": 8, "uniqueItems": true,
+        |           "items": {"type": "string", "pattern": "^[a-z]{2,12}$"}},
+        |  "address": {"type": "object", "required": ["city", "zip"], "properties": {
+        |    "city": {"type": "string", "minLength": 1},
+        |    "zip": {"type": "string", "pattern": "^[0-9]{5}$"}}}}}""".stripMargin))
+    val path = java.nio.file.Files.createTempDirectory("records").resolve("records.parquet").toString
+    spark.sql("""SELECT format_string('rec-%010d', id) AS rec_id,
+      |concat('user', id, '@example.com') AS email, '2024-01-02T03:04:05Z' AS created_at,
+      |element_at(array('active', 'pending', 'closed'), cast(id % 3 + 1 AS int)) AS status,
+      |cast(id * 7 % 1100 AS int) AS score, slice(array('ab', 'cd', 'ef'), 1, cast(id % 4 AS int)) AS tags,
+      |named_struct('city', concat('city', id % 97), 'zip', format_string('%05d', id)) AS address
+      |FROM range(200)""".stripMargin).write.parquet(path)
+    (pack, spark.read.parquet(path))
+  }
+
+  private def expressions(plan: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan) =
+    plan.collect { case n => n }.flatMap(_.expressions.flatMap(_.collect { case e => e }))
+
+  test("records-like pack: the analyzed validate plan stays small and reads root fields as columns") {
+    // a root field compiled as getField over a struct of every column put a
+    // full copy of that struct into the analyzed tree per field read
+    // (~3,370 nodes for this pack); the optimizer folded every copy away
+    import graft.core.Violations
+    import org.apache.spark.sql.catalyst.expressions.{CreateNamedStruct, GetStructField}
+    val (pack, df) = records
+    val analyzed = Violations.sorted(Violations.validate(df, pack, Seq("rec_id")), Seq("rec_id"))
+      .queryExecution.analyzed
+    val exprs = expressions(analyzed)
+    assert(exprs.size <= 1650, s"${exprs.size} analyzed expression nodes")
+    assert(!exprs.exists {
+      case GetStructField(_: CreateNamedStruct, _, _) => true
+      case _ => false
+    }, analyzed)
+  }
+
+  test("records-like pack: the verdict's optimized plan builds no error struct and no concat") {
+    import graft.core.Violations
+    import org.apache.spark.sql.catalyst.expressions.{Concat, CreateNamedStruct}
+    val (pack, df) = records
+    val verdict = Violations.verdictByPartition(df, pack, None)
+    val plan = verdict.queryExecution.optimizedPlan
+    val exprs = expressions(plan)
+    assert(exprs.nonEmpty && !exprs.exists {
+      case _: CreateNamedStruct | _: Concat => true
+      case _ => false
+    }, plan)
+    // the pass tier fails exactly the rows the error tier reports (scores
+    // over the maximum of 1000)
+    import org.apache.spark.sql.functions.sum
+    val failing = Violations.validate(df, pack, Seq("rec_id")).select("rec_id").distinct().count()
+    assert(failing > 0)
+    assert(verdict.agg(sum("n_rows"), sum("n_failed")).head().toSeq === Seq(200L, failing))
+  }
+
   test("sketched drift aggregates each snapshot once: two KLL sketches, unused sums pruned") {
     // sketchedDistances feeds PSI, KL and JS from one sketch per snapshot;
     // psiSketched selects one column of it, so ColumnPruning must leave the

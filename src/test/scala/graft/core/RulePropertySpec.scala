@@ -173,6 +173,71 @@ class RulePropertySpec extends SparkSuite {
       1 -> Gen.lzy(Gen.listOfN(2, genArrRule(depth - 1))).map(AnyOf(_)),
       1 -> Gen.lzy(Gen.listOfN(3, genArrRule(depth - 1))).map(OneOf(_)))
 
+  private val intValues: Seq[Option[Long]] = (-6L to 16L).map(Some(_)) :+ None
+  private val strValues: Seq[Option[String]] =
+    Seq("a", "ab", "abc", "xyz", "hello", "", "Abc", "a1", "b", "zb").map(Some(_)) :+ None
+  private val arrValues: Seq[Option[Seq[Long]]] = Seq(
+    Some(Seq.empty[Long]), Some(Seq(0L)), Some(Seq(2L)), Some(Seq(2L, 2L)),
+    Some(Seq(1L, 2L, 3L)), Some(Seq(4L, 4L, 6L, 6L)), Some(Seq(-3L, 0L, 3L, 6L, 9L)),
+    Some(Seq(7L, 7L, 7L, 7L, 7L, 7L)), None)
+
+  /** Runs `f` with whole-stage codegen and expression codegen off, so every
+    * expression takes its interpreted `eval` path. */
+  private def interpreted[T](f: => T): T = {
+    val keys = Seq("spark.sql.codegen.wholeStage", "spark.sql.codegen.factoryMode")
+    val saved = keys.map(k => k -> spark.conf.getOption(k))
+    try {
+      spark.conf.set("spark.sql.codegen.wholeStage", "false")
+      spark.conf.set("spark.sql.codegen.factoryMode", "NO_CODEGEN")
+      f
+    } finally saved.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None)    => spark.conf.unset(k)
+    }
+  }
+
+  /** The pass tier of each rule in the same three batches as the oracle
+    * test of its domain: non-NULL, equal to `size(errs) = 0` and equal to
+    * the oracle, under generated code and under interpreted evaluation. */
+  private def passTierAgrees[V](values: Seq[V], df: org.apache.spark.sql.DataFrame, seed: Long,
+      gen: Gen[Rule], oracle: (Rule, V) => Boolean): Unit = {
+    val dt = df.schema("value").dataType
+    (1 to 3).foreach { batch =>
+      val rules = Gen.listOfN(40, gen).apply(
+        Gen.Parameters.default.withSize(10),
+        org.scalacheck.rng.Seed(batch * seed)).get
+      val cols = rules.zipWithIndex.flatMap { case (r, i) =>
+        val t = RuleCompiler.tiers(r, dt, col("value"), lit(""))
+        Seq(t.pass.as(s"p$i"), (size(t.errs) === 0).as(s"e$i"))
+      }
+      for ((mode, got) <- Seq("codegen" -> df.select(cols: _*).collect(),
+          "interpreted" -> interpreted(df.select(cols: _*).collect()))) {
+        values.zipWithIndex.foreach { case (v, vi) =>
+          rules.zipWithIndex.foreach { case (r, ri) =>
+            val row = got(vi)
+            assert(!row.isNullAt(2 * ri), s"NULL pass tier ($mode) on value=$v rule=$r")
+            val pass = row.getBoolean(2 * ri)
+            assert(pass === row.getBoolean(2 * ri + 1),
+              s"pass tier disagrees with size(errs) = 0 ($mode) on value=$v rule=$r")
+            assert(pass === oracle(r, v), s"pass tier disagrees with the oracle ($mode) on value=$v rule=$r")
+          }
+        }
+      }
+    }
+  }
+
+  test("pass tier = size(errs) = 0 = oracle on random INTEGER rules, codegen and interpreted") {
+    passTierAgrees(intValues, intValues.toDF("value").cache(), 7919L, genRule(2), passes)
+  }
+
+  test("pass tier = size(errs) = 0 = oracle on random STRING rules, codegen and interpreted") {
+    passTierAgrees(strValues, strValues.toDF("value").cache(), 104729L, genStrRule(2), passesStr)
+  }
+
+  test("pass tier = size(errs) = 0 = oracle on random ARRAY rules, codegen and interpreted") {
+    passTierAgrees(arrValues, arrValues.toDF("value").cache(), 15485863L, genArrRule(2), passesArr)
+  }
+
   test("compiler agrees with the oracle on random ARRAY rules × values") {
     val values: Seq[Option[Seq[Long]]] = Seq(
       Some(Seq.empty[Long]), Some(Seq(0L)), Some(Seq(2L)), Some(Seq(2L, 2L)),
