@@ -33,10 +33,6 @@ object Coerce {
   def defaults(c: Column, default: JValue, dt: DataType): Column =
     coalesce(c, RuleCompiler.litOf(default, dt).getOrElse(lit(null).cast(dt)))
 
-  /** scalar → 1-element array (OpenAPIv3 form-data, OpenAPIv3.pm:307-310);
-    * static in a typed schema — provided for completeness. */
-  def scalarToArray(c: Column): Column = array(c)
-
   /** OpenAPI v2 collectionFormat splitting (reference OpenAPIv2.pm:245-256):
     * csv/ssv/tsv/pipes delimited string → array<string>. `multi` has no
     * single-column representation (it is a repeated query parameter) and is

@@ -1,7 +1,7 @@
 package graft.functions
 
 import org.apache.spark.sql.{Column, SparkSession}
-import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.{FunctionIdentifier, InternalRow}
 import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow}
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
 import org.apache.spark.sql.catalyst.trees.BinaryLike
@@ -174,10 +174,13 @@ object TopKByScore {
     TopKByScore(exprs(0), exprs(1), intLit(exprs(2)), boolLit(exprs(3)))
   }
 
-  /** Register `topk_by_score(score, id, k, asc)` in this session. */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "topk_by_score", fromExpressions, "built-in")
+  /** Register `topk_by_score(score, id, k, asc)` in this session, once: a
+    * session that already has it is left as it is. */
+  def register(spark: SparkSession): Unit = {
+    val registry = spark.sessionState.functionRegistry
+    if (!registry.functionExists(FunctionIdentifier("topk_by_score")))
+      registry.createOrReplaceTempFunction("topk_by_score", fromExpressions, "built-in")
+  }
 
   /** Column form (requires [[register]] once per session). */
   def topkByScore(score: Column, id: Column, k: Int, asc: Boolean): Column =

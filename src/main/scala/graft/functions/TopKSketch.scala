@@ -1,7 +1,7 @@
 package graft.functions
 
 import org.apache.spark.sql.{Column, SparkSession}
-import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.{FunctionIdentifier, InternalRow}
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
 import org.apache.spark.sql.catalyst.trees.BinaryLike
@@ -137,10 +137,13 @@ object TopKSketch {
     })
 
   /** Register `topk_sketch(key, payload, k)` for SQL and `call_function`
-    * use in this session. */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "topk_sketch", fromExpressions, "built-in")
+    * use in this session, once: a session that already has it (a prior
+    * call, or the [[graft.GraftExtensions]] injection) is left as it is. */
+  def register(spark: SparkSession): Unit = {
+    val registry = spark.sessionState.functionRegistry
+    if (!registry.functionExists(FunctionIdentifier("topk_sketch")))
+      registry.createOrReplaceTempFunction("topk_sketch", fromExpressions, "built-in")
+  }
 
   /** Column form (requires [[register]] once per session, or the
     * [[graft.GraftExtensions]] injection). */

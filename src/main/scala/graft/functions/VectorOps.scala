@@ -1,7 +1,7 @@
 package graft.functions
 
 import org.apache.spark.sql.{Column, SparkSession}
-import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.{FunctionIdentifier, InternalRow}
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -125,10 +125,13 @@ object VectorOps {
   def fromExpressions(exprs: Seq[Expression]): DotProduct =
     DotProduct(exprs(0), exprs(1))
 
-  /** Register `graft_dot(a, b)` in this session (idempotent). */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_dot", fromExpressions, "built-in")
+  /** Register `graft_dot(a, b)` in this session, once: a session that
+    * already has it is left as it is. */
+  def register(spark: SparkSession): Unit = {
+    val registry = spark.sessionState.functionRegistry
+    if (!registry.functionExists(FunctionIdentifier("graft_dot")))
+      registry.createOrReplaceTempFunction("graft_dot", fromExpressions, "built-in")
+  }
 
   /** Column form. Registers against the active session on first use so
     * library callers never see an undefined-function error; cluster-wide

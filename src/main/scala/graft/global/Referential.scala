@@ -64,13 +64,4 @@ object Referential {
       .orderBy(col("n").desc, col(keyCol))
       .limit(k)
   }
-
-  /** Violation rows in the engine's standard shape. */
-  def violationRows(facts: DataFrame, factKey: String, dim: DataFrame, dimKey: String,
-      idCols: Seq[String], ruleId: String = "referential",
-      broadcastDim: Boolean = true): DataFrame =
-    violations(facts, factKey, dim, dimKey, broadcastDim)
-      .select(idCols.map(col) :+
-        lit(ruleId).as("rule_id") :+
-        col(factKey).cast("string").as("observed"): _*)
 }

@@ -1,6 +1,7 @@
 package graft.pipeline
 
 import org.apache.spark.sql.{Column, DataFrame, Observation}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** Deduplication operators for training-data pipelines, in increasing
@@ -452,41 +453,29 @@ object Dedup {
   /** Connected components via alternating large-star / small-star rounds
     * (Kiveris et al., "Connected Components in MapReduce and Beyond") — the
     * adversarial-diameter upgrade of [[connectedComponents]]: a chain of
-    * length L needs L min-label rounds but only O(log L) star rounds, each
-    * two partial-aggregated groupBys + two joins shuffling |E|.
+    * length L needs L min-label rounds but only O(log L) star rounds.
     *
     *  - large-star: every edge (u,v) with v > u re-points v at
     *    m(u) = min(Γ(u) ∪ {u}) — big nodes hook onto their neighborhood min;
     *  - small-star: every node points itself and its smaller neighbors at
     *    min(Γ⁻(u) ∪ {u}) — flattens the remaining short trees.
     *
+    * A round ([[starRound]]) reads its checkpointed edge set once and runs
+    * three exchanges: each star step is a `min … over Window.partitionBy(src)`
+    * followed by one `inline` that emits the step's edges, and the round ends
+    * in one `distinct`. No frame is referenced twice, so no step is planned
+    * twice and no self-join exists.
+    *
+    * Hub note: all of a node's edges meet in one sort-based Window task
+    * (which spills when it outgrows memory); AQE's skew-join split does not
+    * apply to a Window, so a hub of degree d costs one task of d rows.
+    *
     * Converges when the edge set is a union of stars (each node → its
-    * component min); same output contract as [[connectedComponents]]. */
+    * component min); same output contract as [[connectedComponents]]. A node
+    * whose only edge is a self-loop is in no component and not in the
+    * output. */
   def connectedComponentsStar(pairs: DataFrame, idA: String = "id_a",
       idB: String = "id_b", maxIter: Int = 30): DataFrame = {
-    // the one distinct per half-round: star outputs may repeat edges, sym
-    // dedups them together with their reversals
-    def sym(e: DataFrame): DataFrame =
-      e.unionByName(e.select(col("dst").as("src"), col("src").as("dst"))).distinct()
-
-    def largeStar(e: DataFrame): DataFrame = {
-      val m = e.groupBy("src").agg(least(min(col("dst")), col("src")).as("m"))
-      e.where(col("dst") > col("src"))
-        .join(m, "src")
-        .select(col("dst").as("src"), col("m").as("dst"))
-        .where(col("src") =!= col("dst"))
-    }
-
-    def smallStar(e: DataFrame): DataFrame = {
-      val lower = e.where(col("dst") < col("src"))
-      // smaller neighbors are all < src, so min(Γ⁻ ∪ {u}) = min(Γ⁻)
-      val m = lower.groupBy("src").agg(min(col("dst")).as("m"))
-      lower.join(m, "src")
-        .select(col("dst").as("src"), col("m").as("dst"))
-        .unionByName(m.select(col("src"), col("m").as("dst")))
-        .where(col("src") =!= col("dst"))
-    }
-
     // Order-independent set signature (count, XOR of per-edge hashes),
     // observed on the round's own localCheckpoint — no separate job. A
     // different signature PROVES the edge set changed, so the exact
@@ -507,24 +496,53 @@ object Dedup {
         .groupBy("src", "dst").agg(bit_or(col("__t")).as("__t"))
         .where(col("__t") =!= 3).count()
 
-    var (edges, sigNow) =
-      checkpointSigned(sym(pairs.select(col(idA).as("src"), col(idB).as("dst"))))
+    var (edges, sigNow) = checkpointSigned(
+      edgeRows(pairs, col(idA) -> col(idB), col(idB) -> col(idA)).distinct())
     var iter = 0
     var changed = 1L
     while (changed > 0 && iter < maxIter) {
-      val (next, sigNext) = checkpointSigned(sym(smallStar(sym(largeStar(edges)))))
+      val (next, sigNext) = checkpointSigned(starRound(edges))
       changed = if (sigNext == sigNow) symmetricDifference(edges, next) else 1L
       edges = next
       sigNow = sigNext
       iter += 1
     }
     requireConverged(changed, iter, "connectedComponentsStar")
-    // at convergence every non-root points straight at its component min
-    val links = edges.where(col("dst") < col("src"))
-      .select(col("src").as("id"), col("dst").as("component")).distinct()
-    val roots = links.select(col("component").as("id"), col("component")).distinct()
-    links.unionByName(roots)
+    // at convergence every non-root points straight at its component min:
+    // each lower edge labels its source and its root
+    edgeRows(edges.where(col("dst") < col("src")),
+        col("src") -> col("dst"), col("dst") -> col("dst"))
+      .distinct().toDF("id", "component")
   }
+
+  /** One large-star + small-star round over a symmetric, distinct edge set
+    * `(src, dst)`; returns the next symmetric, distinct edge set. The input
+    * is read once, and the plan is linear: two Window exchanges on `src`,
+    * then the `distinct`'s. */
+  private[graft] def starRound(edges: DataFrame): DataFrame = {
+    val bySrc = Window.partitionBy("src")
+    // large-star: each upper edge (u, v) re-points v at m(u). Only its lower
+    // half (v, m(u)) is emitted — v > u ≥ m(u), so it is never a self-loop —
+    // because small-star reads lower edges only; the round's last step adds
+    // every reversal.
+    val large = edges
+      .select(col("src"), col("dst"), least(min(col("dst")).over(bySrc), col("src")).as("m"))
+      .where(col("dst") > col("src"))
+      .select(col("dst").as("src"), col("m").as("dst"))
+    // small-star: every lower edge (v, w) is already w < v, so
+    // min(Γ⁻(v) ∪ {v}) = min(Γ⁻(v)); both directions of (w, m) and (v, m)
+    // come out of one Generate, self-loops (w = m) dropped
+    val m = col("m")
+    edgeRows(large.withColumn("m", min(col("dst")).over(bySrc)),
+        col("dst") -> m, m -> col("dst"), col("src") -> m, m -> col("src"))
+      .where(col("src") =!= col("dst"))
+      .distinct()
+  }
+
+  /** `(src, dst)` rows, one per column pair per input row, from one
+    * Generate (`inline` over an array of structs). */
+  private def edgeRows(e: DataFrame, out: (Column, Column)*): DataFrame =
+    e.select(inline(array(out.map { case (s, d) => struct(s.as("src"), d.as("dst")) }: _*)))
 
   /** MinHash dedup GROUPS without ever materializing candidate pairs:
     * min-label propagation on the doc–bucket BIPARTITE graph. Each round is
@@ -816,8 +834,7 @@ object Dedup {
       .agg(collect_list(struct(col("pos"), col("word"))).as("pw"))
       .select(col("id"), col("bidx"),
         array_join(transform(array_sort(col("pw")), p => p.getField("word")), " ").as("block"))
-    val firstWin = org.apache.spark.sql.expressions.Window
-      .partitionBy("id", "block").orderBy("bidx")
+    val firstWin = Window.partitionBy("id", "block").orderBy("bidx")
     val marked = blocks.withColumn("rn", row_number().over(firstWin))
     marked.groupBy("id").agg(
         count(lit(1)).as("n_blocks"),

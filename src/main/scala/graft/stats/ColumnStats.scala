@@ -96,15 +96,4 @@ object ColumnStats {
       .select(col("s.column").as("column"), explode(col("s.ests")).as("e"))
       .select(col("column"), col("e.q").as("q"), col("e.est").as("est"))
   }
-
-  /** Per-partition stats for the lineage/metrics table (north_rule):
-    * group by a data partition column, one shuffle of constant-size state. */
-  def byPartition(df: DataFrame, partitionCol: String, valueCol: String): DataFrame =
-    df.groupBy(col(partitionCol)).agg(
-      count(lit(1)).as("n_rows"),
-      count(col(valueCol)).as("n_nonnull"),
-      min(col(valueCol)).as("min_v"),
-      max(col(valueCol)).as("max_v"),
-      avg(col(valueCol)).as("avg_v"),
-      approx_count_distinct(col(valueCol)).as("approx_distinct"))
 }

@@ -4,6 +4,7 @@ import graft.core.{JArr, JInt, JObj, JStr, JValue}
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{StringType, StructField, StructType}
 
 import java.nio.charset.StandardCharsets
 
@@ -114,13 +115,15 @@ class SnapshotStore(root: String, spark: SparkSession) {
     * manifest commit never happened are rewritten (same bytes — dynamic
     * overwrite is idempotent) and then counted and committed here, so the
     * count-back also heals a torn previous run — but ONLY for partitions
-    * this run's input actually contains: the count-back is intersected with
-    * the partition keys the write itself saw, observed on it
-    * (`collect_set` of the key through an `Observation`, read after the
-    * write returns; no second job re-runs the input to find them), so stray
+    * this run's input actually contains: the count-back reads only the
+    * partition keys the write itself saw, observed on it (`collect_set` of
+    * the key through an `Observation`, read after the write returns; no
+    * second job re-runs the input to find them). The key filter prunes
+    * partitions before any file is opened, so the count-back costs the
+    * footers of this write's files, not of the whole table, and stray
     * directories under a shared root (a torn run of a different dataframe
-    * or another snapshot id) are never claimed as "committed by this run"
-    * and never marked completed. */
+    * or another snapshot id) are never read, never claimed as "committed
+    * by this run" and never marked completed. */
   def writeResumable(df: DataFrame, partCol: String, snapshotId: String): Map[String, Long] = {
     val prior = readManifest(snapshotId).getOrElse(SnapshotManifest(snapshotId, None, Map.empty))
     val done = prior.completed.keySet
@@ -142,22 +145,18 @@ class SnapshotStore(root: String, spark: SparkSession) {
     }
     val inputParts = seen.get("parts").asInstanceOf[collection.Seq[String]].toSet
 
-    // count back the newly committed partitions (metadata-only job)
-    val dataDir = new Path(dataPath)
-    val hasParts = fs.exists(dataDir) &&
-      fs.listStatus(dataDir).exists(s => s.isDirectory && s.getPath.getName.startsWith(s"$partCol="))
+    // count back the newly committed partitions (metadata-only job); the
+    // filter is on the partition column alone, so partition pruning lists
+    // and opens only the partitions this write saw (none of them is done:
+    // the input excluded those). The partition column is read as the
+    // directory's string, not as an inferred type: "007" must stay "007"
+    // to match the key the write observed, not come back as 7.
     val counts =
-      if (!hasParts) Map.empty[String, Long]
-      else {
-        val committed = spark.read.parquet(dataPath)
-          .select(partKey(partCol).as("__p"))
-        val fresh =
-          if (done.isEmpty) committed
-          else committed.where(!col("__p").isInCollection(done))
-        fresh.groupBy("__p").agg(count(lit(1)).as("n"))
-          .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-          .filter { case (p, _) => inputParts.contains(p) }
-      }
+      if (inputParts.isEmpty) Map.empty[String, Long]
+      else spark.read.schema(StructType(Seq(StructField(partCol, StringType)))).parquet(dataPath)
+        .where(partKey(partCol).isInCollection(inputParts))
+        .groupBy(partKey(partCol).as("__p")).agg(count(lit(1)).as("n"))
+        .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
 
     if (counts.nonEmpty)
       writeManifest(prior.copy(completed = prior.completed ++ counts))

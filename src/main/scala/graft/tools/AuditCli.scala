@@ -9,16 +9,21 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Flagship end-to-end audit of a tokenized-sequence table (the north_rule
-  * pipeline): row-local rule pack + global uniqueness + referential
-  * membership + column stats + distribution drift, in four jobs total:
+  * pipeline). Its legs, in order, each its own action over the table:
   *
-  *   1. one scan → row-local violations + per-partition verdicts + stats
-  *   2. uniqueness (hash shuffle of aggregated counts only)
-  *   3. referential anti-join (broadcast dim)
-  *   4. drift histogram (constant-size shuffle)
+  *   1. row-local rule pack → per-rule violation counts with a capped,
+  *      hash-ordered exemplar sample (`Violations.sampleViolations`)
+  *   2. uniqueness of `doc_id` (hash shuffle of aggregated counts only)
+  *   3. referential anti-join of `source` against the allowed sources
+  *      (broadcast dim)
+  *   4. column profile (`ColumnStats.profile`)
+  *   5. with an output root: the violations written resumably, bucketed
+  *      by a `doc_id` hash (`SnapshotStore.writeResumable`), then the
+  *      snapshot's lineage
+  *   6. drift: PSI between the `n_tok` histograms of the table's two halves
   *
-  * Usage: AuditCli [nRows] [maxLen] — synthesizes the table when no path is
-  * given (deterministic generator, TokenGen).
+  * Usage: AuditCli [nRows] [maxLen] [outRoot] — synthesizes the table
+  * (deterministic generator, TokenGen); `outRoot` enables leg 5.
   */
 object AuditCli {
 

@@ -543,4 +543,27 @@ class PlanAuditSpec extends SparkSuite {
       assert(exprs.count(_.isInstanceOf[Sum]) === sums, plan)
     }
   }
+
+  test("a star round reads its checkpointed edge set once and plans three exchanges") {
+    // each star step is a Window over src feeding one Generate, and the
+    // round ends in one distinct: no self-join re-plans the round's input
+    import org.apache.spark.sql.execution.LogicalRDD
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    import spark.implicits._
+    val path = (1L until 6L).flatMap(i => Seq((i, i + 1), (i + 1, i)))
+    val round = graft.pipeline.Dedup.starRound(path.toDF("src", "dst").localCheckpoint())
+    val leaves = round.queryExecution.optimizedPlan.collectLeaves()
+    assert(leaves.size === 1 && leaves.head.isInstanceOf[LogicalRDD], leaves)
+    val physical = round.queryExecution.executedPlan match {
+      case a: AdaptiveSparkPlanExec => a.initialPlan
+      case p => p
+    }
+    assert(physical.collect { case e: ShuffleExchangeExec => e }.size === 3, physical)
+    // large-star hooks v onto the min of v-1's neighbourhood (2→1, 3→1,
+    // 4→2, 5→3, 6→4); each of those is already its node's only lower edge,
+    // so small-star keeps them, and the round returns them both ways
+    val hooks = Seq((2L, 1L), (3L, 1L), (4L, 2L), (5L, 3L), (6L, 4L))
+    assert(round.as[(Long, Long)].collect().toSet === (hooks ++ hooks.map(_.swap)).toSet)
+  }
 }

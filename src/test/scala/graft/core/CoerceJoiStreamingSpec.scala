@@ -90,6 +90,23 @@ class CoerceJoiStreamingSpec extends SparkSuite {
     assert(Violations.validateColumn(Seq("nope").toDF("value"), emailRule, "value", Seq()).count() === 1)
   }
 
+  test("joi isoDate lowers to the RFC 3339 date-time format") {
+    val rule = joi.string.isoDate.rule
+    assert(rule === Rule.all(Seq(Rule.TypeIs(Seq("string")), Rule.Format("date-time"))))
+    val ok = Seq("2024-01-02T03:04:05Z", "2024-01-02T03:04:05.5+01:00").toDF("value")
+    assert(Violations.validateColumn(ok, rule, "value", Seq()).count() === 0)
+    val bad = Seq("2024-01-02", "2024-13-02T03:04:05Z", "not a date").toDF("value")
+    assert(Violations.validateColumn(bad, rule, "value", Seq()).count() === 3)
+  }
+
+  test("joi nullValue accepts only null") {
+    val rule = joi.nullValue.rule
+    assert(rule === Rule.all(Seq(Rule.TypeIs(Seq("null")))))
+    val values = Seq(Option.empty[String], Some("x"), Some("")).toDF("value")
+    val errs = Violations.validateColumn(values, rule, "value", Seq())
+    assert(errs.count() === 2)
+  }
+
   /** File-source streams need a directory: stage the single parquet file. */
   private lazy val eventsDir: String = {
     val d = java.nio.file.Files.createTempDirectory("events-stream")

@@ -3,6 +3,7 @@ package graft.stats
 import graft.SparkSuite
 import graft.core.{Rule, Violations}
 import graft.functions.TopKSketch
+import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.functions._
 
 class TopKSketchSpec extends SparkSuite {
@@ -72,5 +73,24 @@ class TopKSketchSpec extends SparkSuite {
     assert(!plan.contains("Window"), "violation sampling sorts per rule in a window")
     assert(!plan.contains("Sort "), "violation sampling plans a sort")
     assert(plan.contains("ObjectHashAggregate"), "topk_sketch lost its object-hash aggregate")
+  }
+
+  test("sampleViolations registers topk_sketch once per session") {
+    // a fresh session has no topk_sketch; the first call registers it, a
+    // second call reuses that registration instead of replacing it
+    val fresh = spark.newSession()
+    val registry = fresh.sessionState.functionRegistry
+    val id = FunctionIdentifier("topk_sketch")
+    assert(!registry.functionExists(id))
+    val df = fresh.createDataFrame((0L until 20L).map(i => (i, -1L))).toDF("id", "x")
+    val rule = Rule.All(Seq(Rule.Properties(Seq("x" -> Rule.Minimum(0)))))
+    def sampled(): Long = Violations.sampleViolations(
+      Violations.validate(df, rule, Seq("id")), Seq("id"), perRuleK = 3)
+      .collect().head.getAs[Long]("n_violations")
+    assert(sampled() === 20L)
+    val builder = registry.lookupFunctionBuilder(id)
+    assert(builder.isDefined)
+    assert(sampled() === 20L)
+    assert(registry.lookupFunctionBuilder(id).get eq builder.get, "topk_sketch was registered again")
   }
 }

@@ -2,9 +2,14 @@ package graft.table
 
 import graft.SparkSuite
 import graft.sources.TokenGen
+import org.apache.spark.sql.execution.{FileSourceScanExec, QueryExecution, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.util.QueryExecutionListener
 
 import java.nio.file.Files
+
+import scala.jdk.CollectionConverters._
 
 /** Resumable snapshot semantics: interrupted runs resume from the manifest,
   * completed partitions are never reprocessed, output is exactly-once per
@@ -121,6 +126,64 @@ class SnapshotStoreSpec extends SparkSuite {
     assert(again.isEmpty)
     assert(store.read().count() === 2000L)
     assert(store.readManifest("snap-f").get.completed.values.sum === 2000L)
+  }
+
+  test("writeResumable: the count-back reads only the partitions this write saw") {
+    val root = Files.createTempDirectory("snap7").toString
+    val store = new SnapshotStore(root, spark)
+    // stray partitions of another dataframe already sit under data/
+    TokenGen.tokenSequences(spark, 600, numPartitions = 3, maxLen = 8)
+      .withColumn("bucket", pmod(xxhash64(col("doc_id")), lit(3)).cast("int") + 10)
+      .write.partitionBy("bucket").parquet(store.dataPath)
+    val df = TokenGen.tokenSequences(spark, 2000, numPartitions = 2, maxLen = 8)
+      .withColumn("bucket", pmod(xxhash64(col("doc_id")), lit(2)).cast("int"))
+
+    val scans = new java.util.concurrent.ConcurrentLinkedQueue[FileSourceScanExec]()
+    val listener = new QueryExecutionListener {
+      override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
+        scans.addAll(fileScans(qe.executedPlan).asJava)
+      override def onFailure(funcName: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    val written =
+      try {
+        val w = store.writeResumable(df, "bucket", "snap-g")
+        // the listener runs on the listener bus: the count-back is the run's
+        // one file scan, so wait for it to arrive
+        val deadline = System.nanoTime() + 30L * 1000000000L
+        while (scans.isEmpty && System.nanoTime() < deadline) Thread.sleep(20)
+        w
+      } finally spark.listenerManager.unregister(listener)
+    assert(written.keySet === Set("0", "1"))
+    assert(written.values.sum === 2000L)
+
+    val writtenFiles = Seq("0", "1").map { p =>
+      new java.io.File(s"${store.dataPath}/bucket=$p").listFiles().count(_.getName.endsWith(".parquet"))
+    }.sum
+    val countBack = scans.asScala.toSeq
+    assert(countBack.size === 1, countBack)
+    assert(countBack.head.metrics("numPartitions").value === 2L)
+    assert(countBack.head.metrics("numFiles").value === writtenFiles.toLong)
+  }
+
+  test("writeResumable: zero-padded partition values are counted back under their own key") {
+    // the directory names read like integers; the count-back must not turn
+    // "007" into 7 and then fail to match the key the write saw
+    import spark.implicits._
+    val root = Files.createTempDirectory("snap8").toString
+    val store = new SnapshotStore(root, spark)
+    val df = Seq(("a", "007"), ("b", "007"), ("c", "010")).toDF("id", "part")
+    assert(store.writeResumable(df, "part", "snap-h") === Map("007" -> 2L, "010" -> 1L))
+    assert(store.readManifest("snap-h").get.completed === Map("007" -> 2L, "010" -> 1L))
+    assert(store.writeResumable(df, "part", "snap-h").isEmpty)
+  }
+
+  /** File scans of a plan, through AQE's adaptive and query-stage leaves. */
+  private def fileScans(p: SparkPlan): Seq[FileSourceScanExec] = p.collectLeaves().flatMap {
+    case f: FileSourceScanExec => Seq(f)
+    case a: AdaptiveSparkPlanExec => fileScans(a.executedPlan)
+    case q: QueryStageExec => fileScans(q.plan)
+    case _ => Nil
   }
 
   test("writeBucketed refuses to overwrite an unrelated catalog table of the same name") {
