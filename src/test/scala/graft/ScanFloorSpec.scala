@@ -1,5 +1,6 @@
 package graft
 
+import graft.queries.Tables
 import org.apache.spark.sql.catalyst.plans.logical.Repartition
 
 /** The scan-parallelism floor's sizing: a metadata failure must fall safe
@@ -12,18 +13,18 @@ class ScanFloorSpec extends SparkSuite {
   private val split = 128L << 20
 
   test("reachable scan tasks: ceiling division that never overflows") {
-    assert(SparkEntry.reachableScanTasks(0L, split) === 0L)
-    assert(SparkEntry.reachableScanTasks(1L, split) === 1L)
-    assert(SparkEntry.reachableScanTasks(split, split) === 1L)
-    assert(SparkEntry.reachableScanTasks(split + 1, split) === 2L)
-    assert(SparkEntry.reachableScanTasks(Long.MaxValue, split) === (Long.MaxValue - 1) / split + 1)
-    assert(SparkEntry.reachableScanTasks(Long.MaxValue, 1L) === Long.MaxValue)
-    assert(SparkEntry.reachableScanTasks(Long.MaxValue - 1, Long.MaxValue) === 1L)
+    assert(Tables.reachableScanTasks(0L, split) === 0L)
+    assert(Tables.reachableScanTasks(1L, split) === 1L)
+    assert(Tables.reachableScanTasks(split, split) === 1L)
+    assert(Tables.reachableScanTasks(split + 1, split) === 2L)
+    assert(Tables.reachableScanTasks(Long.MaxValue, split) === (Long.MaxValue - 1) / split + 1)
+    assert(Tables.reachableScanTasks(Long.MaxValue, 1L) === Long.MaxValue)
+    assert(Tables.reachableScanTasks(Long.MaxValue - 1, Long.MaxValue) === 1L)
   }
 
   private def floored(path: String): Boolean = {
     val df = spark.range(10).toDF()
-    SparkEntry.scanFloor(spark, df, path).queryExecution.logical
+    Tables.scanFloor(spark, df, path).queryExecution.logical
       .collectFirst { case r: Repartition => r }.isDefined
   }
 
