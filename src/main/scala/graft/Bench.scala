@@ -12,8 +12,7 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = GraftSession.get(cpus, "graft-bench")
+    val spark = GraftSession.get(appName = "graft-bench")
 
     // warm the JVM/codegen once on the smallest table
     spark.read.parquet(s"$sfDir/region.parquet").count()

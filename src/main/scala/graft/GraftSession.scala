@@ -5,6 +5,12 @@ import org.apache.spark.sql.SparkSession
 /** Central SparkSession factory — every engine entry point builds its
   * session here so the engine's config choices apply uniformly:
   *
+  *  - the engine's five SQL functions, from [[GraftExtensions]] (installed
+  *    through `spark.sql.extensions`, after any extensions the launch conf
+  *    already names, so a `--conf spark.sql.extensions=graft.GraftExtensions`
+  *    launch injects each function once); every `newSession()` child shares
+  *    them,
+  *  - `local[cores]`, where `cores` defaults to [[Cores]],
   *  - `shuffle.partitions = cores` (local mode; the 200 default just adds
   *    task-scheduling overhead),
   *  - AQE on (runtime re-planning, skew-join backstop),
@@ -23,10 +29,25 @@ object GraftSession {
 
   val ExcludedRules = "org.apache.spark.sql.catalyst.optimizer.InferFiltersFromGenerate"
 
-  def builder(cores: String, appName: String = "graft"): SparkSession.Builder =
+  /** The core count of every engine main: `SPARK_GRAFT_CPUS`, else every
+    * processor of this machine. */
+  val Cores: String =
+    sys.env.getOrElse("SPARK_GRAFT_CPUS", Runtime.getRuntime.availableProcessors.toString)
+
+  private val ExtensionsKey = "spark.sql.extensions"
+
+  /** `spark.sql.extensions` of a session: the launch conf's classes (a
+    * builder option replaces the launch conf's value, so they are kept
+    * here), then [[GraftExtensions]] unless the launch conf names it. */
+  private[graft] def extensions(launch: Option[String]): String =
+    (launch.toSeq.flatMap(_.split(",")).map(_.trim).filter(_.nonEmpty) :+
+      classOf[GraftExtensions].getName).distinct.mkString(",")
+
+  def builder(cores: String = Cores, appName: String = "graft"): SparkSession.Builder =
     SparkSession.builder()
       .master(s"local[$cores]")
       .appName(appName)
+      .config(ExtensionsKey, extensions(sys.props.get(ExtensionsKey)))
       .config("spark.sql.shuffle.partitions", cores)
       .config("spark.sql.adaptive.enabled", "true")
       // AQE post-shuffle coalescing floor: this engine's per-byte CPU cost
@@ -44,7 +65,7 @@ object GraftSession {
       .config("spark.sql.codegen.cache.maxEntries", "1000")
       .config("spark.ui.enabled", "false")
 
-  def get(cores: String, appName: String = "graft"): SparkSession = {
+  def get(cores: String = Cores, appName: String = "graft"): SparkSession = {
     val s = builder(cores, appName).getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     s

@@ -20,8 +20,7 @@ object Verify {
     // optional extra args: run only these query names (local iteration);
     // two args → the full sweep. Checked before the session starts.
     val queries = select(args.toSeq.drop(2))
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = GraftSession.get(cpus, "graft-verify")
+    val spark = GraftSession.get(appName = "graft-verify")
     new java.io.File(outDir).mkdirs()
     queries.foreach { case (name, fn) =>
       try fn(spark, sfDir).coalesce(1).write.mode("overwrite")

@@ -123,7 +123,6 @@ object Violations {
   def sampleViolations(violations: DataFrame, idCols: Seq[String],
       perRuleK: Int,
       keyCols: Seq[String] = Seq("path", "rule_id", "message")): DataFrame = {
-    graft.functions.TopKSketch.register(violations.sparkSession)
     val keyStr = concat_ws("|",
       (idCols ++ keyCols).map(c => col(c).cast("string")): _*)
     // portable 32-bit md5-window hash — the same single definition the

@@ -2,8 +2,8 @@ package graft.functions
 
 import java.security.MessageDigest
 
-import org.apache.spark.sql.{Column, SparkSession}
-import org.apache.spark.sql.catalyst.{FunctionIdentifier, InternalRow}
+import org.apache.spark.sql.Column
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression, UnsafeArrayData, XXH64}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -188,19 +188,7 @@ object MinHashTerms {
       literal(exprs(2), "numHashes").asInstanceOf[Int], literal(exprs(3), "family").toString)
   }
 
-  /** Register `minhash_terms(terms, k, numHashes, family)` in this session
-    * (idempotent). */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "minhash_terms", fromExpressions, "built-in")
-
-  /** Column form. Registers against the active session on first use, like
-    * [[VectorOps.dot]]; cluster-wide registration rides
-    * [[graft.GraftExtensions]]. */
-  def minhashTerms(terms: Column, k: Int, numHashes: Int, family: String): Column = {
-    SparkSession.getActiveSession.orElse(SparkSession.getDefaultSession)
-      .filterNot(_.sessionState.functionRegistry.functionExists(FunctionIdentifier("minhash_terms")))
-      .foreach(register)
+  /** Column form of `minhash_terms` (injected by [[graft.GraftExtensions]]). */
+  def minhashTerms(terms: Column, k: Int, numHashes: Int, family: String): Column =
     call_function("minhash_terms", terms, lit(k), lit(numHashes), lit(family))
-  }
 }

@@ -1,7 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
-import org.apache.spark.sql.catalyst.FunctionIdentifier
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -172,18 +171,7 @@ object Rfc3339Check {
     Rfc3339Check(exprs(0), String.valueOf(exprs(1).eval()))
   }
 
-  /** Register `rfc3339_check(s, kind)` in this session (idempotent). */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "rfc3339_check", fromExpressions, "built-in")
-
-  /** Column form. Registers against the active session on first use, like
-    * [[MinHashTerms.minhashTerms]]; cluster-wide registration rides
-    * [[graft.GraftExtensions]]. */
-  def rfc3339Check(s: Column, kind: String): Column = {
-    SparkSession.getActiveSession.orElse(SparkSession.getDefaultSession)
-      .filterNot(_.sessionState.functionRegistry.functionExists(FunctionIdentifier("rfc3339_check")))
-      .foreach(register)
+  /** Column form of `rfc3339_check` (injected by [[graft.GraftExtensions]]). */
+  def rfc3339Check(s: Column, kind: String): Column =
     call_function("rfc3339_check", s, lit(kind))
-  }
 }

@@ -1,7 +1,7 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
-import org.apache.spark.sql.catalyst.{FunctionIdentifier, InternalRow}
+import org.apache.spark.sql.Column
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow}
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
 import org.apache.spark.sql.catalyst.trees.BinaryLike
@@ -157,8 +157,8 @@ case class TopKByScore(
 
 object TopKByScore {
 
-  /** Expression-list constructor shared by [[register]] and the
-    * [[graft.GraftExtensions]] injection. */
+  /** Expression-list constructor of the [[graft.GraftExtensions]]
+    * injection. */
   def fromExpressions(exprs: Seq[Expression]): TopKByScore = {
     def intLit(e: Expression): Int = e.eval() match {
       case i: Int => i
@@ -174,15 +174,7 @@ object TopKByScore {
     TopKByScore(exprs(0), exprs(1), intLit(exprs(2)), boolLit(exprs(3)))
   }
 
-  /** Register `topk_by_score(score, id, k, asc)` in this session, once: a
-    * session that already has it is left as it is. */
-  def register(spark: SparkSession): Unit = {
-    val registry = spark.sessionState.functionRegistry
-    if (!registry.functionExists(FunctionIdentifier("topk_by_score")))
-      registry.createOrReplaceTempFunction("topk_by_score", fromExpressions, "built-in")
-  }
-
-  /** Column form (requires [[register]] once per session). */
+  /** Column form of `topk_by_score` (injected by [[graft.GraftExtensions]]). */
   def topkByScore(score: Column, id: Column, k: Int, asc: Boolean): Column =
     call_function("topk_by_score", score, id, lit(k), lit(asc))
 }

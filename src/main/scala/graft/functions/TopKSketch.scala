@@ -1,7 +1,7 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
-import org.apache.spark.sql.catalyst.{FunctionIdentifier, InternalRow}
+import org.apache.spark.sql.Column
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
 import org.apache.spark.sql.catalyst.trees.BinaryLike
@@ -126,8 +126,8 @@ case class TopKSketch(
 
 object TopKSketch {
 
-  /** Expression-list constructor shared by the per-session [[register]]
-    * and the application-wide [[graft.GraftExtensions]] injection. */
+  /** Expression-list constructor of the [[graft.GraftExtensions]]
+    * injection. */
   def fromExpressions(exprs: Seq[Expression]): TopKSketch =
     TopKSketch(exprs(0), exprs(1), exprs(2).eval() match {
       case i: Int => i
@@ -136,17 +136,7 @@ object TopKSketch {
         s"k must be an integer literal, got $other")
     })
 
-  /** Register `topk_sketch(key, payload, k)` for SQL and `call_function`
-    * use in this session, once: a session that already has it (a prior
-    * call, or the [[graft.GraftExtensions]] injection) is left as it is. */
-  def register(spark: SparkSession): Unit = {
-    val registry = spark.sessionState.functionRegistry
-    if (!registry.functionExists(FunctionIdentifier("topk_sketch")))
-      registry.createOrReplaceTempFunction("topk_sketch", fromExpressions, "built-in")
-  }
-
-  /** Column form (requires [[register]] once per session, or the
-    * [[graft.GraftExtensions]] injection). */
+  /** Column form of `topk_sketch` (injected by [[graft.GraftExtensions]]). */
   def topkSketch(key: Column, payload: Column, k: Int): Column =
     call_function("topk_sketch", key, payload, lit(k))
 }

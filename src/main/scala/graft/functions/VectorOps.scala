@@ -1,7 +1,7 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
-import org.apache.spark.sql.catalyst.{FunctionIdentifier, InternalRow}
+import org.apache.spark.sql.Column
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -122,23 +122,11 @@ case class DotProduct(left: Expression, right: Expression) extends BinaryExpress
 
 object VectorOps {
 
+  /** Expression-list constructor of the [[graft.GraftExtensions]]
+    * injection. */
   def fromExpressions(exprs: Seq[Expression]): DotProduct =
     DotProduct(exprs(0), exprs(1))
 
-  /** Register `graft_dot(a, b)` in this session, once: a session that
-    * already has it is left as it is. */
-  def register(spark: SparkSession): Unit = {
-    val registry = spark.sessionState.functionRegistry
-    if (!registry.functionExists(FunctionIdentifier("graft_dot")))
-      registry.createOrReplaceTempFunction("graft_dot", fromExpressions, "built-in")
-  }
-
-  /** Column form. Registers against the active session on first use so
-    * library callers never see an undefined-function error; cluster-wide
-    * registration rides [[graft.GraftExtensions]]. */
-  def dot(a: Column, b: Column): Column = {
-    SparkSession.getActiveSession.orElse(SparkSession.getDefaultSession)
-      .foreach(register)
-    call_function("graft_dot", a, b)
-  }
+  /** Column form of `graft_dot` (injected by [[graft.GraftExtensions]]). */
+  def dot(a: Column, b: Column): Column = call_function("graft_dot", a, b)
 }

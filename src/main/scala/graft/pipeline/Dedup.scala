@@ -383,35 +383,10 @@ object Dedup {
       .where(col("n_agree") >= minAgree)
   }
 
-  /** Connected components over candidate pairs — turns near-duplicate PAIRS
-    * into duplicate GROUPS (component id = min doc id in the group, the
-    * canonical "keeper"). Iterative min-label propagation: each round every
-    * node takes the min of its own label and its neighbors' labels;
-    * converges in O(graph diameter) rounds, which for dedup graphs (dense
-    * cliques of near-identical docs, tiny diameter) is 2–3 rounds.
-    * `localCheckpoint` breaks lineage per round so plans stay flat.
-    *
-    * Scale note: rounds = diameter joins, each shuffling |edges|; for
-    * adversarially long chain graphs at 10^12 edges the two-phase
-    * large-star/small-star variant (Kiveris et al., "Connected Components
-    * in MapReduce and Beyond") halves the work — dedup graphs don't need
-    * it. Output `(id, component)`. */
-  def connectedComponents(pairs: DataFrame, idA: String = "id_a",
-      idB: String = "id_b", maxIter: Int = 20): DataFrame = {
-    val edges = pairs.select(col(idA).as("src"), col(idB).as("dst"))
-      .unionByName(pairs.select(col(idB).as("src"), col(idA).as("dst")))
-      .distinct().localCheckpoint()
-    minLabelLoop(edges.select(col("src").as("id")).distinct(), maxIter, "connectedComponents") {
-      labels =>
-        edges.join(labels, edges("src") === labels("id"))
-          .groupBy(col("dst").as("id")).agg(min("label").as("nmin"))
-    }.withColumnRenamed("label", "component")
-  }
-
-  /** The min-label propagation loop shared by [[connectedComponents]] and
-    * [[minhashComponents]]: every node starts as its own label; each round
-    * takes `least(label, nmin)` with `neighborMin(labels)` giving
-    * `(id, nmin)`, until no label changes. Each round is ONE job: the
+  /** The min-label propagation loop of [[minhashComponents]]: every node
+    * starts as its own label; each round takes `least(label, nmin)` with
+    * `neighborMin(labels)` giving `(id, nmin)`, until no label changes.
+    * Rounds = graph diameter. Each round is ONE job: the
     * changed-label count is observed on the round's `localCheckpoint`
     * (`Dataset.observe`) instead of a separate `count()` pass over it.
     * Returns `(id, label)`. */
@@ -450,10 +425,12 @@ object Dedup {
         "raise maxIter (rounds needed = graph diameter) — returning partial labels would " +
         "split duplicate groups silently")
 
-  /** Connected components via alternating large-star / small-star rounds
-    * (Kiveris et al., "Connected Components in MapReduce and Beyond") — the
-    * adversarial-diameter upgrade of [[connectedComponents]]: a chain of
-    * length L needs L min-label rounds but only O(log L) star rounds.
+  /** Connected components over candidate pairs — turns near-duplicate PAIRS
+    * into duplicate GROUPS (component id = min doc id in the group, the
+    * canonical "keeper") — via alternating large-star / small-star rounds
+    * (Kiveris et al., "Connected Components in MapReduce and Beyond"): a
+    * chain of length L needs L min-label rounds but only O(log L) star
+    * rounds.
     *
     *  - large-star: every edge (u,v) with v > u re-points v at
     *    m(u) = min(Γ(u) ∪ {u}) — big nodes hook onto their neighborhood min;
@@ -471,9 +448,8 @@ object Dedup {
     * apply to a Window, so a hub of degree d costs one task of d rows.
     *
     * Converges when the edge set is a union of stars (each node → its
-    * component min); same output contract as [[connectedComponents]]. A node
-    * whose only edge is a self-loop is in no component and not in the
-    * output. */
+    * component min). Output `(id, component)`. A node whose only edge is a
+    * self-loop is in no component and not in the output. */
   def connectedComponentsStar(pairs: DataFrame, idA: String = "id_a",
       idB: String = "id_b", maxIter: Int = 30): DataFrame = {
     // Order-independent set signature (count, XOR of per-edge hashes),
@@ -549,7 +525,7 @@ object Dedup {
     * two partial-aggregated groupBys over the `(doc, bucket)` index (size =
     * docs × bands), so a degenerate hot bucket costs |bucket| rows — the
     * pair-based route pays |bucket|² before it can even start grouping.
-    * Connectivity is identical to [[connectedComponents]] over
+    * Connectivity is identical to [[connectedComponentsStar]] over
     * [[minhashCandidatePairs]] (docs are connected iff they share a
     * bucket), so the two agree exactly; this is the form that survives
     * 10⁹-doc corpora. Output `(id, component)` restricted to groups of ≥ 2

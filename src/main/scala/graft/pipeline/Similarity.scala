@@ -51,7 +51,6 @@ object Similarity {
     * same as `row_number`). */
   def topKPerQuery(scored: DataFrame, qCol: String, scoreName: String,
       idName: String, k: Int, asc: Boolean): DataFrame = {
-    graft.functions.TopKByScore.register(scored.sparkSession)
     scored.groupBy(qCol)
       .agg(graft.functions.TopKByScore
         .topkByScore(col(scoreName), col(idName), k, asc).as("__tops"))

@@ -63,12 +63,14 @@ object Tables {
     val target = s.sparkContext.defaultParallelism
     // width the scan could reach at the most generous split size — pure
     // file-metadata arithmetic (planning an RDD here costs ~0.1 s per
-    // call); Hadoop FS API so hdfs:/s3a: inputs size correctly too, and
-    // any metadata failure falls safe to "wide enough" (no extra exchange)
+    // call); Hadoop FS API so hdfs:/s3a: inputs size correctly too. A
+    // directory's size is the sum of its files (its own status length is
+    // about 0), and any metadata failure falls safe to "wide enough" (no
+    // extra exchange)
     val bytes =
       try {
         val p = new org.apache.hadoop.fs.Path(path)
-        p.getFileSystem(s.sparkContext.hadoopConfiguration).getFileStatus(p).getLen
+        p.getFileSystem(s.sparkContext.hadoopConfiguration).getContentSummary(p).getLength
       } catch { case _: Exception => Long.MaxValue }
     if (reachableScanTasks(bytes, s.sessionState.conf.filesMaxPartitionBytes) < target)
       df.repartition(target)

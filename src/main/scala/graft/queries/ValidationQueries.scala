@@ -589,7 +589,7 @@ object ValidationQueries {
       // randomized, so the oracle pins the portable pair: the EXACT
       // distances plus the claim that the sketched ones landed within 0.01
       // absolute (QuantileSketch.K is sized so the 20-run worst gap stays
-      // at most half of that; TDigestSpec pins the tracking law on a
+      // at most half of that; QuantileSketchSpec pins the tracking law on a
       // strongly-drifted fixture where PSI > 0.2)
       val li = t("lineitem")
       val ref = li.where(col("l_shipdate") < lit("1998-01-01").cast("timestamp"))

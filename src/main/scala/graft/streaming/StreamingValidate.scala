@@ -1,7 +1,7 @@
 package graft.streaming
 
 import graft.core.{Rule, RuleCompiler}
-import org.apache.spark.sql.{Column, DataFrame, Dataset}
+import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
@@ -10,26 +10,13 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   * extension for continuous ingest validation).
   *
   * Row-local rules are stateless projections, so the exact same compiled
-  * Catalyst expressions run unchanged on a stream; the dataset-global rules
+  * Catalyst expressions run unchanged on a stream: a stream's violations
+  * are [[graft.core.Violations.validate]] on it; the dataset-global rules
   * become windowed aggregates with watermarks (bounded state). Uniqueness
   * over an unbounded stream is necessarily windowed — global uniqueness
   * belongs to the batch/snapshot path.
   */
 object StreamingValidate {
-
-  /** Violations on a stream: same compile as batch, filter-before-explode.
-    * Append-mode safe (no aggregation). */
-  def violations(stream: DataFrame, rule: Rule, idCols: Seq[String],
-      ctx: RuleCompiler.Ctx = RuleCompiler.Ctx()): DataFrame = {
-    val errs = RuleCompiler.compileRow(rule, stream.schema, ctx).errs
-    val keep = idCols.map(col)
-    stream.select(keep :+ errs.as("_errs"): _*)
-      .select(keep :+ explode(col("_errs")).as("_e"): _*)
-      .select(keep ++ Seq(
-        when(col("_e.path") === "", "/").otherwise(col("_e.path")).as("path"),
-        col("_e.rule_id").as("rule_id"),
-        col("_e.observed").as("observed")): _*)
-  }
 
   /** One deduplicated row `(key, fingerprint, event_time)`. */
   final case class DedupedDoc(key: String, fp: String, ts: java.sql.Timestamp)
@@ -228,7 +215,6 @@ object StreamingValidate {
   def windowedViolationSamples(stream: DataFrame, rule: Rule, tsCol: String,
       idCol: String, windowDuration: String, watermark: String,
       perRuleK: Int): DataFrame = {
-    graft.functions.TopKSketch.register(stream.sparkSession)
     val v = graft.core.Violations.validate(
       stream.withWatermark(tsCol, watermark), rule, Seq(idCol, tsCol))
     // same '0:'||id md5-window rank family the batch sampler and the

@@ -40,12 +40,10 @@ object AuditCli {
   def main(args: Array[String]): Unit = {
     val n = args.lift(0).map(_.toLong).getOrElse(100000L)
     val maxLen = args.lift(1).map(_.toLong).getOrElse(256L)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-
-    val spark = graft.GraftSession.get(cpus, "graft-audit")
+    val spark = graft.GraftSession.get(appName = "graft-audit")
 
     val t0 = System.nanoTime()
-    val facts = TokenGen.tokenSequences(spark, n, numPartitions = cpus.toInt * 2, maxLen = maxLen)
+    val facts = TokenGen.tokenSequences(spark, n, numPartitions = spark.sparkContext.defaultParallelism * 2, maxLen = maxLen)
     val dim = TokenGen.allowedSources(spark)
     val pack = tokenRulePack(maxLen = maxLen.toInt)
 

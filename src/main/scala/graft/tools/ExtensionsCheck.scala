@@ -3,8 +3,9 @@ package graft.tools
 import org.apache.spark.sql.SparkSession
 
 /** Smoke check for the `--conf spark.sql.extensions=graft.GraftExtensions`
-  * launch path: the session must resolve every injected function WITHOUT
-  * any driver-side registration. Run via:
+  * launch path, which a session built outside [[graft.GraftSession]] needs:
+  * the session must resolve all five injected functions from that conf
+  * alone. Run via:
   * {{{
   *   tools/submit.sh graft.tools.ExtensionsCheck 4
   * }}}
@@ -20,6 +21,11 @@ object ExtensionsCheck {
       "SELECT topk_sketch(99 - id, CAST(id AS STRING), 3) AS t FROM nums")
       .head().getSeq[String](0)
     require(top == Seq("99", "98", "97"), s"bad topk_sketch: $top")
+    // the top-k by (score, id): the 3 highest scores, ties to the smaller id
+    val byScore = spark.sql(
+      "SELECT transform(topk_by_score(CAST(id % 10 AS DOUBLE), id, 3, false), e -> e.id) AS t " +
+        "FROM nums").head().getSeq[Long](0)
+    require(byScore == Seq(9L, 19L, 29L), s"bad topk_by_score: $byScore")
     // the codegen'd dot product, from pure SQL (no driver registration)
     val d = spark.sql(
       "SELECT graft_dot(array(CAST(1.0 AS FLOAT), CAST(2.0 AS FLOAT)), " +
@@ -37,7 +43,8 @@ object ExtensionsCheck {
         "NOT rfc3339_check('2023-02-29', 'date') AND rfc3339_check('10:00:00Z', 'time') AS ok")
       .head().getBoolean(0)
     require(rfc, "bad rfc3339_check")
-    println(s"EXTOK topk=${top.mkString(",")} dot=$d minhash=$mh rfc3339=$rfc")
+    println(s"EXTOK topk=${top.mkString(",")} topk_by_score=${byScore.mkString(",")} " +
+      s"dot=$d minhash=$mh rfc3339=$rfc")
     spark.stop()
   }
 }

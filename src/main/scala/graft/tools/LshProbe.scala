@@ -15,7 +15,7 @@ object LshProbe {
     val dir = args.lift(0).getOrElse("/root/testdata/sf0.1")
     val tables = args.lift(1).map(_.toInt).getOrElse(4)
     val bits = args.lift(2).map(_.toInt).getOrElse(8)
-    val spark = graft.GraftSession.get(sys.env.getOrElse("SPARK_GRAFT_CPUS", "8"), "graft-lsh-probe")
+    val spark = graft.GraftSession.get(appName = "graft-lsh-probe")
     val emb = spark.read.parquet(s"$dir/embeddings.parquet")
     val total = emb.count()
 

@@ -11,7 +11,8 @@ import org.apache.spark.sql.functions._
   *   2. quality + language filters (pure per-row expressions, ride the
   *      same scan);
   *   3. near-dup GROUP collapse: MinHash banding → candidate pairs →
-  *      connected components → keep the min-id doc per component;
+  *      large-star/small-star connected components → keep the best doc
+  *      per component;
   *   4. resumable snapshot write (per-partition lineage in the manifest).
   *
   * Usage: PipelineCli [docsParquet] [outRoot] [minQuality] [lang]
@@ -22,7 +23,7 @@ object PipelineCli {
     val outRoot = args.lift(1)
     val minQuality = args.lift(2).map(_.toDouble).getOrElse(0.3)
     val lang = args.lift(3).getOrElse("en")
-    val spark = graft.GraftSession.get(sys.env.getOrElse("SPARK_GRAFT_CPUS", "8"), "graft-pipeline")
+    val spark = graft.GraftSession.get(appName = "graft-pipeline")
 
     val docs = spark.read.parquet(docsPath)
     val n0 = docs.count()
@@ -62,7 +63,7 @@ object PipelineCli {
     // placeholder policy before groupRepresentatives existed)
     val pairs = Dedup.minhashCandidatePairs(filtered, "doc_id", "text",
       shingleK = 3, numHashes = 16, bands = 8, family = Dedup.XxFast)
-    val comps = Dedup.connectedComponents(pairs)
+    val comps = Dedup.connectedComponentsStar(pairs)
     val reps = Dedup.groupRepresentatives(comps,
       filtered.select(col("doc_id"), col("quality")), "doc_id", "quality")
     val dropIds = comps.join(reps.select(col("keep_id").as("id")), Seq("id"), "left_anti")

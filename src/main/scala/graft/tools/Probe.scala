@@ -17,8 +17,7 @@ import java.util.Locale
   *
   * No query names means every query, in sorted order; an unknown name fails
   * before any job runs. `--sf` defaults to `SPARK_GRAFT_SF_DIR`, then
-  * `/root/testdata/sf0.1`. The core count is `SPARK_GRAFT_CPUS`, else every
-  * available processor.
+  * `/root/testdata/sf0.1`. The core count is [[graft.GraftSession.Cores]].
   */
 object Probe {
 
@@ -26,8 +25,7 @@ object Probe {
     "       runMain graft.tools.Probe plan [--sf DIR] [--out DIR] [query…]"
 
   def main(args: Array[String]): Unit = {
-    val cores = sys.env.getOrElse("SPARK_GRAFT_CPUS", Runtime.getRuntime.availableProcessors.toString)
-    val spark = GraftSession.get(cores, "graft-probe")
+    val spark = GraftSession.get(appName = "graft-probe")
     try run(spark, args.toSeq) finally spark.stop()
   }
 

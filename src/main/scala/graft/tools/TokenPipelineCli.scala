@@ -32,7 +32,7 @@ object TokenPipelineCli {
     val maxLen = args.lift(1).map(_.toLong).getOrElse(256L)
     val budget = args.lift(2).map(_.toLong).getOrElse(2048L)
     val outRoot = args.lift(3)
-    val spark = graft.GraftSession.get(sys.env.getOrElse("SPARK_GRAFT_CPUS", "8"), "graft-token-pipeline")
+    val spark = graft.GraftSession.get(appName = "graft-token-pipeline")
 
     val facts = graft.sources.TokenGen.tokenSequences(spark, n,
       numPartitions = 16, maxLen = maxLen)

@@ -30,7 +30,7 @@ object ValidateCli {
       }
     }.getOrElse(graft.core.Rule.Both)
 
-    val spark = graft.GraftSession.get(sys.env.getOrElse("SPARK_GRAFT_CPUS", "4"), "graft-validate")
+    val spark = graft.GraftSession.get(appName = "graft-validate")
 
     // format-sniffed: JSON or YAML packs both load (Util.pm:163-167)
     val packText = new String(java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(packPath)), "UTF-8")

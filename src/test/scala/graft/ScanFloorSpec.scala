@@ -4,7 +4,8 @@ import graft.queries.Tables
 import org.apache.spark.sql.catalyst.plans.logical.Repartition
 
 /** The scan-parallelism floor's sizing: a metadata failure must fall safe
-  * to "wide enough" (no extra exchange). The reachable-task arithmetic
+  * to "wide enough" (no extra exchange), and a directory input is sized by
+  * the files in it. The reachable-task arithmetic
   * used to compute `(bytes + maxSplit − 1) / maxSplit`, which wraps
   * negative on the failure sentinel `Long.MaxValue` and so applied the
   * floor it meant to skip. */
@@ -36,5 +37,28 @@ class ScanFloorSpec extends SparkSuite {
       java.nio.file.Files.write(small, new Array[Byte](4096))
       assert(floored(small.toString))
     } finally java.nio.file.Files.delete(small)
+  }
+
+  test("a directory is sized by its files: many small files reaching session width get no exchange") {
+    assume(sys.env.getOrElse("GRAFT_SCAN_FLOOR", "1") != "0", "scan floor disabled")
+    val width = spark.sparkContext.defaultParallelism
+    val key = "spark.sql.files.maxPartitionBytes"
+    val saved = spark.conf.getOption(key)
+    val dir = java.nio.file.Files.createTempDirectory("graft-scan-floor-dir")
+    val files = (0 until width).map(i => dir.resolve(s"part-$i.parquet"))
+    try {
+      files.foreach(f => java.nio.file.Files.write(f, new Array[Byte](4096)))
+      spark.conf.set(key, "4096")
+      assert(!floored(dir.toString))
+      // one of those files alone reaches a single task
+      assert(floored(files.head.toString))
+    } finally {
+      saved match {
+        case Some(v) => spark.conf.set(key, v)
+        case None    => spark.conf.unset(key)
+      }
+      files.foreach(java.nio.file.Files.deleteIfExists)
+      java.nio.file.Files.delete(dir)
+    }
   }
 }

@@ -186,14 +186,14 @@ class CoerceJoiStreamingSpec extends SparkSuite {
     val rule = Rule.Properties(Seq(
       "event_type" -> Rule.Enum(Seq(JStr("click"), JStr("view"), JStr("signup"), JStr("purchase"))),
       "value" -> Rule.Maximum(400)))
-    val v = StreamingValidate.violations(stream, rule, Seq("event_id"))
+    val v = Violations.validate(stream, rule, Seq("event_id"))
     val q = v.writeStream.format("memory").queryName("sviol")
       .outputMode("append").trigger(Trigger.AvailableNow()).start()
     q.processAllAvailable(); q.stop()
 
     val got = spark.table("sviol")
     val batch = spark.read.parquet(s"$dir/events.parquet")
-    val want = StreamingValidate.violations(batch, rule, Seq("event_id"))
+    val want = Violations.validate(batch, rule, Seq("event_id"))
     assert(got.count() === want.count())
     assert(got.count() > 0)
     assert(got.except(want).count() === 0 && want.except(got).count() === 0)
@@ -329,7 +329,7 @@ class CoerceJoiStreamingSpec extends SparkSuite {
     assert(math.abs(direct - byGroup) < 1e-9)
   }
 
-  test("streaming windowed t-digest: weight-exact counts, medians track batch within rank tol") {
+  test("streaming windowed KLL sketch: exact item counts, medians track batch within rank tol") {
     // the quantile-monitor contract behind st06: one KLL sketch per closed
     // window; its item count == the window's exact non-null count, and
     // the streamed median lands within the sketch's rank error of the
@@ -378,6 +378,48 @@ class CoerceJoiStreamingSpec extends SparkSuite {
       val tol = math.max(0.02, 0.5 / r.getLong(3) + 1e-9)
       assert(r.getDouble(1) - tol <= 0.5 && 0.5 <= r.getDouble(2) + tol,
         s"median rank off at ${r.getLong(0)}: [${r.getDouble(1)}, ${r.getDouble(2)}] n=${r.getLong(3)}")
+    }
+  }
+
+  test("streaming windowed KLL sketch past K: exact item counts, medians within st06's gate") {
+    // st06's windows hold fewer than K values at sf0.001 and sf0.01, so
+    // their sketches are exact; here each window holds 3,000 values, the
+    // sketch compacts, and st06's rank gate max(0.02, 2/n) judges a real
+    // estimate. A last event a day later closes both windows.
+    val n = 3000
+    assert(n > graft.stats.QuantileSketch.K)
+    val t0 = 1704067200L // 2024-01-01T00:00:00Z
+    val dir = java.nio.file.Files.createTempDirectory("kll-wide").resolve("events").toString
+    spark.range(2L * n)
+      .select(timestamp_seconds(lit(t0) + (col("id") % 2) * 3600 + col("id") % 3600).as("ts"),
+        (exp(pmod(xxhash64(col("id")), lit(100000)) / 20000.0)).as("value"))
+      .union(Seq(0.0).toDF("value").select(timestamp_seconds(lit(t0 + 86400)).as("ts"), col("value")))
+      .write.parquet(dir)
+    val events = spark.read.parquet(dir)
+    val q = StreamingValidate.windowedQuantileDigest(
+        spark.readStream.schema(events.schema).parquet(dir), "ts", "value", "1 hour", "1 minute")
+      .writeStream.format("memory").queryName("sdig_wide")
+      .outputMode("append").trigger(Trigger.AvailableNow()).start()
+    q.processAllAvailable(); q.stop()
+    val streamed = spark.table("sdig_wide")
+      .select(col("window_start").cast("long").as("grp"), col("digest"),
+        kll_sketch_get_n_double(col("digest")).as("w"),
+        graft.stats.QuantileSketch.quantile(col("digest"), 0.5).as("med"))
+      .collect()
+    assert(streamed.map(_.getLong(0)).toSet === Set(t0, t0 + 3600))
+    streamed.foreach { r =>
+      assert(r.getLong(2) === n.toLong, s"item count at ${r.getLong(0)}")
+      val kll = org.apache.datasketches.kll.KllDoublesSketch.heapify(
+        org.apache.datasketches.memory.Memory.wrap(r.getAs[Array[Byte]]("digest")))
+      assert(kll.isEstimationMode, s"sketch at ${r.getLong(0)} kept every value")
+      val med = r.getDouble(3)
+      val window = events.where(col("ts") >= timestamp_seconds(lit(r.getLong(0))) &&
+        col("ts") < timestamp_seconds(lit(r.getLong(0) + 3600)))
+      val Seq(lt, le) = window.agg(sum((col("value") < med).cast("long")),
+        sum((col("value") <= med).cast("long"))).head().toSeq.map(_.asInstanceOf[Long])
+      val tol = math.max(0.02, 2.0 / n)
+      assert(lt.toDouble / n - tol <= 0.5 && 0.5 <= le.toDouble / n + tol,
+        s"median rank off at ${r.getLong(0)}: [$lt, $le] of $n")
     }
   }
 

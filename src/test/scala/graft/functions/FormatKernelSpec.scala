@@ -174,7 +174,6 @@ class FormatKernelSpec extends SparkSuite {
   }
 
   test("SQL form: rfc3339_check(s, kind) and its argument checks") {
-    Rfc3339Check.register(spark)
     val df = Seq("2024-02-29", "2023-02-29", "10:00:00Z").toDF("s").repartition(1)
     assert(df.selectExpr("rfc3339_check(s, 'date')").as[Boolean].collect().toSeq ===
       df.select(Formats.date(col("s"))).as[Boolean].collect().toSeq)

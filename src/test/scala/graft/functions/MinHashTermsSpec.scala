@@ -102,20 +102,16 @@ class MinHashTermsSpec extends SparkSuite {
   }
 
   test("GraftExtensions injects minhash_terms") {
-    // extensions apply at SESSION CREATION — the suite's shared session
-    // predates any conf, so the full `--conf spark.sql.extensions=…` path
-    // is exercised via spark-submit (tools/submit.sh + ExtensionsCheck);
-    // here the injection must register without error, and the builder it
-    // injects (the one register() installs) must answer through SQL
-    new graft.GraftExtensions().apply(new org.apache.spark.sql.SparkSessionExtensions)
-    MinHashTerms.register(spark)
+    // the suite's session is built by GraftSession, which installs the
+    // extensions: SQL resolves the function with no registration call (the
+    // `--conf spark.sql.extensions=…` path of a session built elsewhere is
+    // exercised via spark-submit: tools/submit.sh + ExtensionsCheck)
     assert(spark.sql(
       "SELECT minhash_terms(array(1, 2, 3), 3, 2, 'xxhash64')[1] = xxhash64(1, '1 2 3')")
       .head().getBoolean(0))
   }
 
   test("SQL form: minhash_terms(terms, k, numHashes, family) and its argument checks") {
-    MinHashTerms.register(spark)
     val viaSql = tokenDocs.selectExpr("doc_id", "minhash_terms(tokens, 3, 4, 'xxhash64') AS s")
     val viaCol = tokenDocs.select(col("doc_id"),
       MinHashTerms.minhashTerms(col("tokens"), 3, 4, "xxhash64").as("s"))

@@ -19,7 +19,6 @@ class TopKByScoreSpec extends SparkSuite {
   }
 
   private def aggTopK(df: DataFrame, k: Int, asc: Boolean): DataFrame = {
-    TopKByScore.register(spark)
     df.groupBy("q")
       .agg(TopKByScore.topkByScore(col("score"), col("id"), k, asc).as("t"))
       .select(col("q"), posexplode(col("t")).as(Seq("p", "e")))

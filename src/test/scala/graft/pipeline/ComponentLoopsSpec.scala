@@ -117,17 +117,6 @@ class ComponentLoopsSpec extends SparkSuite {
   }
 
   test("min-label loops observe their changed-label count: no count job per round") {
-    val path = (1L until 12L).map(i => (i, i + 1))
-    val execs = executionsOf {
-      assert(components(Dedup.connectedComponents(path.toDF("id_a", "id_b"))) ===
-        unionFind(path))
-    }
-    val actions = execs.map(action)
-    assert(!actions.contains("count"), execs)
-    // edges + initial labels + one checkpoint per round (12 rounds: the
-    // 11-hop path needs 11 changing rounds and one quiet one)
-    assert(actions.count(_ == "localCheckpoint") === 2 + 12, execs)
-
     val docs = Seq((1L, "a b c d e f g"), (2L, "a b c d e f h"), (3L, "x y z w v u t"))
       .toDF("doc_id", "text")
     val mh = executionsOf {

@@ -470,7 +470,7 @@ class PipelineSpec extends SparkSuite {
     // a 5-node path (diameter 4 → needs >1 propagation round) + a separate pair
     val pairs = Seq((1L, 2L), (2L, 3L), (3L, 4L), (4L, 5L), (10L, 11L))
       .toDF("id_a", "id_b")
-    val cc = Dedup.connectedComponents(pairs).orderBy("id")
+    val cc = Dedup.connectedComponentsStar(pairs).orderBy("id")
       .as[(Long, Long)].collect().toSeq
     assert(cc === Seq(1L -> 1L, 2L -> 1L, 3L -> 1L, 4L -> 1L, 5L -> 1L, 10L -> 10L, 11L -> 10L))
   }
@@ -662,13 +662,15 @@ class PipelineSpec extends SparkSuite {
   }
 
   test("connected components FAIL LOUDLY when maxIter exits before convergence") {
-    // a 6-node path needs ~5 propagation rounds; maxIter=2 exits with labels
-    // still changing — returning them would silently split the group
-    val pairs = Seq((1L, 2L), (2L, 3L), (3L, 4L), (4L, 5L), (5L, 6L)).toDF("id_a", "id_b")
+    // bipartite min-label propagation: three identical docs share every
+    // bucket, so the first round relabels two of them and a second, quiet
+    // round is needed; maxIter=1 exits with labels still changing —
+    // returning them would silently split the group
+    val copies = (1L to 3L).map(i => (i, "the same five words here")).toDF("doc_id", "text")
     val e = intercept[IllegalArgumentException] {
-      Dedup.connectedComponents(pairs, maxIter = 2).collect()
+      Dedup.minhashComponents(copies, "doc_id", "text", maxIter = 1).collect()
     }
-    assert(e.getMessage.contains("did not converge"))
+    assert(e.getMessage.contains("minhashComponents did not converge after 1 rounds"))
   }
 
   test("lshSignature with mismatched dims falls back to the md5 path (no bucket-0 collapse)") {
@@ -691,27 +693,17 @@ class PipelineSpec extends SparkSuite {
     assert(ok3 === want)
   }
 
-  test("large-star/small-star components agree with min-label and converge on adversarial chains") {
+  test("large-star/small-star components converge on adversarial chains") {
     // a 120-hop chain: min-label propagation needs 120 rounds (throws at 20);
     // the star algorithm needs O(log 120) ≈ 7
     val chain = (1L until 120L).map(i => (i, i + 1)).toDF("id_a", "id_b")
     val star = Dedup.connectedComponentsStar(chain).orderBy("id")
       .as[(Long, Long)].collect().toSeq
     assert(star === (1L to 120L).map(_ -> 1L))
-
-    // exact agreement with the min-label form on a mixed graph (two cliques
-    // + a bridge + an isolated pair)
-    val pairs = (Seq((1L, 2L), (2L, 3L), (1L, 3L), (3L, 10L)) ++
-      Seq((10L, 11L), (11L, 12L)) ++ Seq((50L, 51L))).toDF("id_a", "id_b")
-    val viaLabels = Dedup.connectedComponents(pairs)
-      .orderBy("id").as[(Long, Long)].collect().toSeq
-    val viaStars = Dedup.connectedComponentsStar(pairs)
-      .orderBy("id").as[(Long, Long)].collect().toSeq
-    assert(viaStars === viaLabels)
   }
 
   test("bipartite minhash components agree exactly with pairs → connected components") {
-    val viaPairs = Dedup.connectedComponents(
+    val viaPairs = Dedup.connectedComponentsStar(
         Dedup.minhashCandidatePairs(docs, "doc_id", "text",
           shingleK = 3, numHashes = 16, bands = 8, family = Dedup.Md5Portable))
       .orderBy("id").as[(Long, Long)].collect().toSeq

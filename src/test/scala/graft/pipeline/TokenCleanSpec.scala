@@ -39,7 +39,7 @@ class TokenCleanSpec extends SparkSuite {
 
     val pairs = Dedup.minhashCandidatePairsTokens(exactDeduped, "doc_id", "tokens",
       shingleK = 3, numHashes = 16, bands = 8, family = Dedup.XxFast)
-    val comps = Dedup.connectedComponents(pairs)
+    val comps = Dedup.connectedComponentsStar(pairs)
     val drop = comps.where(col("id") =!= col("component")).select(col("id").as("doc_id"))
     val cleaned = exactDeduped.join(drop, Seq("doc_id"), "left_anti")
     // the 29/30-shingle-overlap copy shares a band with its source

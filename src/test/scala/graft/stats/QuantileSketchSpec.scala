@@ -15,7 +15,7 @@ import org.apache.spark.sql.functions._
   * the bound meaningful on discrete data, where a single atom can carry
   * more mass than any value-space tolerance allows.
   */
-class TDigestSpec extends SparkSuite {
+class QuantileSketchSpec extends SparkSuite {
   import spark.implicits._
 
   private val qs = Seq(0.001, 0.01, 0.1, 0.25, 0.5, 0.75, 0.9, 0.99, 0.999)
@@ -38,7 +38,7 @@ class TDigestSpec extends SparkSuite {
   private def uniformDf(n: Int): DataFrame =
     spark.range(n).select((pmod(xxhash64(col("id")), lit(1000000)) / 1000.0).as("v"))
 
-  test("rank error < 0.01 on 100k hashed-uniform doubles (compression 300)") {
+  test("rank error < 0.01 on 100k hashed-uniform doubles (K = 500)") {
     assert(maxRankErr(uniformDf(100000), "v") < 0.01)
   }
 
@@ -60,7 +60,7 @@ class TDigestSpec extends SparkSuite {
     assert(e0 == mn && e1 == mx)
   }
 
-  test("merge path: 32-partition digest agrees with 1-partition digest within 0.01 rank") {
+  test("merge path: 32-partition sketch agrees with 1-partition sketch within 0.01 rank") {
     val df = uniformDf(80000)
     assert(maxRankErr(df.repartition(32), "v") < 0.01)
     assert(maxRankErr(df.coalesce(1), "v") < 0.01)

@@ -10,7 +10,6 @@ class TopKSketchSpec extends SparkSuite {
   import spark.implicits._
 
   test("topk_sketch keeps the K smallest (key, payload) pairs in ascending order") {
-    TopKSketch.register(spark)
     val df = Seq((5L, "e"), (1L, "a"), (3L, "c"), (2L, "b"), (4L, "d"))
       .toDF("k", "v")
     val got = df.agg(TopKSketch.topkSketch(col("k"), col("v"), 3).as("top"))
@@ -32,7 +31,6 @@ class TopKSketchSpec extends SparkSuite {
     // encoded bytes; the registered function takes ARBITRARY payloads, so
     // serde is length-prefixed raw UTF-8. Force the merge/serde path with
     // a repartition so partial buffers actually serialize.
-    TopKSketch.register(spark)
     val big = "x" * 100000
     val df = Seq((2L, big), (1L, "small")).toDF("k", "v").repartition(2)
     val got = df.agg(TopKSketch.topkSketch(col("k"), col("v"), 2))
@@ -41,7 +39,6 @@ class TopKSketchSpec extends SparkSuite {
   }
 
   test("topk_sketch is partition-invariant (merge path exercised)") {
-    TopKSketch.register(spark)
     val rng = new scala.util.Random(11)
     val rows = (0 until 5000).map(i => (rng.nextLong(), s"p$i"))
     val expected = rows.sorted.take(7).map(_._2)
@@ -75,21 +72,20 @@ class TopKSketchSpec extends SparkSuite {
     assert(plan.contains("ObjectHashAggregate"), "topk_sketch lost its object-hash aggregate")
   }
 
-  test("sampleViolations registers topk_sketch once per session") {
-    // a fresh session has no topk_sketch; the first call registers it, a
-    // second call reuses that registration instead of replacing it
+  test("a fresh session already has topk_sketch; sampleViolations registers nothing") {
+    // the session's extensions inject topk_sketch into every newSession();
+    // sampling runs on it twice and leaves that registration as it is
     val fresh = spark.newSession()
     val registry = fresh.sessionState.functionRegistry
     val id = FunctionIdentifier("topk_sketch")
-    assert(!registry.functionExists(id))
+    assert(registry.functionExists(id))
+    val builder = registry.lookupFunctionBuilder(id)
     val df = fresh.createDataFrame((0L until 20L).map(i => (i, -1L))).toDF("id", "x")
     val rule = Rule.All(Seq(Rule.Properties(Seq("x" -> Rule.Minimum(0)))))
     def sampled(): Long = Violations.sampleViolations(
       Violations.validate(df, rule, Seq("id")), Seq("id"), perRuleK = 3)
       .collect().head.getAs[Long]("n_violations")
     assert(sampled() === 20L)
-    val builder = registry.lookupFunctionBuilder(id)
-    assert(builder.isDefined)
     assert(sampled() === 20L)
     assert(registry.lookupFunctionBuilder(id).get eq builder.get, "topk_sketch was registered again")
   }
